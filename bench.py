@@ -322,10 +322,17 @@ def run_scaling(sf_dir: str, reps: int | None = None) -> dict:
     if reps is None:
         reps = int(os.environ.get("BENCH_SCALING_REPS", "7"))
     out = {}
-    # Pin away from cpu0: it hosts IRQ/system load on this VM, adding
-    # run-to-run noise of up to ~50% on the 1-core leg (a real
-    # executor host's cores are dedicated).  Cores PIN_BASE..+n-1.
-    pin_base = 16
+    cores = sorted(os.sched_getaffinity(0))
+    if len(cores) < SCALING_4N:
+        return {"skipped": True,
+                "reason": "host allows %d cores; the 4N leg needs %d"
+                          % (len(cores), SCALING_4N)}
+    # Pin away from cpu0 when a core can be spared: it hosts IRQ/system
+    # load, adding run-to-run noise of up to ~50% on the 1-core leg (a
+    # real executor host's cores are dedicated).  A level of n cores
+    # takes the last n allowed cores.
+    if len(cores) > SCALING_4N:
+        cores = [c for c in cores if c != 0]
     spreads = {}
 
     def _one_rep(n: int) -> dict | None:
@@ -335,7 +342,7 @@ def run_scaling(sf_dir: str, reps: int | None = None) -> dict:
         cmd = [sys.executable, "-c", code]
         if have_taskset:
             cmd = ["taskset", "-c",
-                   "%d-%d" % (pin_base, pin_base + n - 1)] + cmd
+                   ",".join(str(c) for c in cores[-n:])] + cmd
         r = subprocess.run(cmd, capture_output=True, text=True,
                            timeout=1800)
         line = [l for l in r.stdout.splitlines() if l.startswith("@@")]
@@ -420,7 +427,8 @@ def main() -> int:
     import __spark_entry__ as entry
     from ferenda_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     spark = get_spark(app="bench", master="local[%d]" % cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()

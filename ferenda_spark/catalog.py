@@ -47,9 +47,16 @@ def write_triples(triples: DataFrame, store_dir: str,
                   mode: str = "overwrite") -> str:
     """The triple sink (S6): partition by a bounded hash bucket of the
     named-graph context so per-document graphs stay co-located and the
-    partition count is independent of corpus size."""
-    bucketed = triples.withColumn(
-        "context_bucket", F.abs(F.hash("context")) % N_BUCKETS)
+    partition count is independent of corpus size.
+
+    Rows are hash-repartitioned on the bucket before the partitioned
+    write, so each bucket is written by exactly one task: the sink
+    holds at most ``N_BUCKETS`` files (one per ``context_bucket=*``
+    directory) whatever the upstream partitioning."""
+    bucketed = (triples
+                .withColumn("context_bucket",
+                            F.abs(F.hash("context")) % N_BUCKETS)
+                .repartition("context_bucket"))
     return write_stage(bucketed, store_dir, table,
                        partition_by=("context_bucket",), mode=mode)
 

@@ -17,7 +17,8 @@ from pyspark.sql import SparkSession
 
 def get_spark(app: str = "ferenda_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     master = master or "local[%d]" % cpus
     if shuffle_partitions is None:
         n = master[master.find("[") + 1:master.find("]")]

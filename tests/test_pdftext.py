@@ -22,6 +22,7 @@ docstring):
   scanned*.pdf have no text layer (the reference OCRs them).
 """
 
+import os
 import re
 
 import pytest
@@ -31,6 +32,11 @@ from ferenda_spark.pdftext import (extract_text_pages, pdf_to_pdf2xml,
                                    synth_pdf_blobs)
 
 FIX = "/root/reference/test/files/pdfreader"
+
+# the golden tests read the reference's fixtures; the synthetic-PDF
+# tests below them run everywhere
+needs_fixtures = pytest.mark.skipif(
+    not os.path.isdir(FIX), reason="reference fixtures not present")
 
 
 def _read(name):
@@ -50,6 +56,7 @@ def _squash(s):
     return re.sub(r"[\x00-\x20\x7f-\xa0]+", "", s)
 
 
+@needs_fixtures
 def test_sample_pdf_line_text_golden():
     pages = extract_text_pages(_read("sample"))
     mine = [_norm_ws(ln["text"]) for p in pages for ln in p["lines"]]
@@ -61,6 +68,7 @@ def test_sample_pdf_line_text_golden():
     assert "Document title" in mine[0]
 
 
+@needs_fixtures
 def test_custom_encoding_pdf_page_charstream_golden():
     """11 LZW-compressed pages; every page's character stream equals
     poppler's cached output (including the custom-encoding mojibake
@@ -75,6 +83,7 @@ def test_custom_encoding_pdf_page_charstream_golden():
         assert mine == want, "page %d" % p["number"]
 
 
+@needs_fixtures
 def test_custom_encoding_readable_fonts_decode():
     """The standard-font (Times-Roman) lines decode to real Swedish
     text, not codes."""
@@ -119,6 +128,7 @@ def _geometry_rows(name):
             for p in pages for ln in p["lines"]]
 
 
+@needs_fixtures
 def test_sample_pdf_geometry_golden():
     """Full box-geometry parity with poppler's cached intermediate:
     every non-blank <text> element's top/left/width/height and its
@@ -128,6 +138,7 @@ def test_sample_pdf_geometry_golden():
     assert [r[:6] for r in mine] == [r[:6] for r in want]
 
 
+@needs_fixtures
 def test_custom_encoding_pdf_geometry_golden():
     """292/294 boxes integer-equal across the 11 LZW pages; the two
     residues are widths off by 1px (sub-pixel straddles of poppler's
@@ -146,6 +157,7 @@ def test_custom_encoding_pdf_geometry_golden():
         assert abs(a[3] - b[3]) == 1
 
 
+@needs_fixtures
 def test_scanned_pdfs_yield_no_text_quietly():
     """Image-only PDFs (the reference OCRs these — out of scope here,
     input table is html) must parse to pages with zero text lines,
@@ -157,6 +169,7 @@ def test_scanned_pdfs_yield_no_text_quietly():
         assert sum(len(p["lines"]) for p in pages) == 0
 
 
+@needs_fixtures
 def test_pdf2xml_roundtrip_through_model():
     """pdf_to_pdf2xml output feeds the existing pdfpages model: same
     text content survives the round trip."""

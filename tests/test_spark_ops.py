@@ -334,6 +334,30 @@ def test_connected_components_chain_and_island(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_long_chain_converges(spark):
+    """A 30-vertex path needs 29 propagation rounds: the loop runs to
+    its fixpoint instead of stopping at a round cap."""
+    from ferenda_spark.operators.canonicalize import connected_components
+    edges = spark.createDataFrame(
+        [(i + 1, i) for i in range(29)], "src long, dst long")
+    got = {r.vertex: r.component
+           for r in connected_components(edges).collect()}
+    assert got == {i: 0 for i in range(30)}
+
+
+def test_connected_components_uris_long_chain_converges(spark):
+    """The string-vertex loop on a 30-vertex path whose canonical
+    (u:0, the (length, value)-minimum) sits at one end."""
+    from ferenda_spark.operators.canonicalize import (
+        connected_components_uris)
+    edges = spark.createDataFrame(
+        [("u:%d" % (i + 1), "u:%d" % i) for i in range(29)],
+        "src string, dst string")
+    got = {r.uri: r.canonical_uri
+           for r in connected_components_uris(edges).collect()}
+    assert got == {"u:%d" % i: "u:0" for i in range(30)}
+
+
 def test_ispartof_closure_two_levels(spark):
     from ferenda_spark.operators.graphs import ispartof_closure
     from ferenda_spark import vocab
@@ -557,18 +581,26 @@ def test_legal_mentions_distributed(spark):
 
 
 def test_catalog_triples_roundtrip_and_merge(spark, tmpdir):
-    """S6 partitioned triple sink roundtrips; S2/I5 merge keeps
+    """S6 partitioned triple sink roundtrips and writes one file per
+    bucket whatever the upstream partitioning; S2/I5 merge keeps
     unmatched keys and replaces matched ones."""
+    import os
     from ferenda_spark import catalog
     t = spark.createDataFrame(
-        [("s1", "p", "o1", None, None, "u1"),
-         ("s2", "p", "o2", None, None, "u2")],
+        [("s%d" % i, "p", "o%d" % i, None, None, "u%d" % (i % 40))
+         for i in range(400)],
         "subj string, pred string, obj string, obj_datatype string, "
         "obj_lang string, context string")
-    catalog.write_triples(t, tmpdir)
+    path = catalog.write_triples(t.repartition(16), tmpdir)
     back = catalog.read_stage(spark, tmpdir, "triples")
-    assert back.count() == 2
+    assert back.count() == 400
     assert "context_bucket" in back.columns
+    buckets = [d for d in os.listdir(path)
+               if d.startswith("context_bucket=")]
+    files = {d: [f for f in os.listdir(os.path.join(path, d))
+                 if f.endswith(".parquet")] for d in buckets}
+    assert all(len(fs) == 1 for fs in files.values()), files
+    assert sum(len(fs) for fs in files.values()) <= catalog.N_BUCKETS
 
     base = spark.createDataFrame([("u1", 1), ("u2", 1)],
                                  "url string, v int")
@@ -663,27 +695,6 @@ def test_hits_matches_pure_python_power_iteration(spark):
     got = {r.vertex: (r.hub_r, r.authority_r)
            for r in hits(edges, iterations=10).collect()}
     assert got == want
-
-
-def test_connected_components_uris_collision_fallback(spark, monkeypatch):
-    """Force the 64-bit-id collision branch (every uri hashes alike)
-    and assert the dictionary fallback yields the identical result —
-    the id scheme must never leak into the output."""
-    from ferenda_spark.operators import canonicalize as cz
-    edges = spark.createDataFrame(
-        [("urn:isbn:b", "mailto:zz@example.org"),
-         ("mailto:zz@example.org", "urn:isbn:a"),
-         ("x:2", "x:10")],
-        "src string, dst string")
-    real = cz.F.xxhash64
-    monkeypatch.setattr(cz.F, "xxhash64", lambda c: real(cz.F.lit("k")))
-    got = {r.uri: r.canonical_uri
-           for r in cz.connected_components_uris(edges).collect()}
-    assert got == {"urn:isbn:a": "urn:isbn:a",
-                   "urn:isbn:b": "urn:isbn:a",
-                   "mailto:zz@example.org": "urn:isbn:a",
-                   "x:2": "x:2",
-                   "x:10": "x:2"}
 
 
 def test_apply_patches_multi_patch_single_row(spark):
