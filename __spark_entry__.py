@@ -27,8 +27,9 @@ _DOCS_CACHE: dict = {}
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (id(spark), sf_dir)
     if key not in _DOCS_CACHE:
+        from ferenda_spark.corpus import load_pages
         from ferenda_spark.pipeline import parsed_docs
-        _DOCS_CACHE[key] = parsed_docs(spark, sf_dir).cache()
+        _DOCS_CACHE[key] = parsed_docs(load_pages(spark, sf_dir)).cache()
     return _DOCS_CACHE[key]
 
 
@@ -74,9 +75,9 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full KG construction + faceted_data pivot at sf0.001."""
-    from ferenda_spark.pipeline import flagship
-    return flagship(spark, "/root/testdata/sf0.001")
+    """Flagship: KG construction + faceted_data pivot at sf0.001 (the
+    registered, oracle-checked ``kg_faceted_data`` query)."""
+    return queries()["kg_faceted_data"](spark, "/root/testdata/sf0.001")
 
 
 # ----------------------------------------------------------- KG queries
@@ -1561,22 +1562,19 @@ def _q_deps_edges(spark, sf_dir):
 
 def _q_incremental_pending(spark, sf_dir):
     """O7/I1/S2 resumable-work selection: fingerprint anti-join against
-    a simulated entries checkpoint — docs never processed (id%5==2) or
-    whose recorded fingerprint is stale (id%13==3) come back as
-    pending; everything else is skipped."""
+    simulated committed (url, input_fingerprint) pairs — docs never
+    processed (id%5==2) or whose recorded fingerprint is stale
+    (id%13==3) come back as pending; everything else is skipped."""
     from ferenda_spark.corpus import load_pages
-    from ferenda_spark.operators.incremental import (fingerprinted,
-                                                     pending_work)
+    from ferenda_spark.operators.incremental import fingerprinted
     pages = fingerprinted(load_pages(spark, sf_dir))
     doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-    entries = (pages.where(doc_id % 5 != 2)
-               .select("url",
-                       F.when(doc_id % 13 == 3, F.lit("stale"))
-                       .otherwise(F.col("input_fingerprint"))
-                       .alias("input_fingerprint"),
-                       F.lit("parse").alias("stage"),
-                       F.lit("true").alias("success")))
-    return (pending_work(pages, entries, "parse")
+    done = (pages.where(doc_id % 5 != 2)
+            .select("url",
+                    F.when(doc_id % 13 == 3, F.lit("stale"))
+                    .otherwise(F.col("input_fingerprint"))
+                    .alias("input_fingerprint")))
+    return (pages.join(done, ["url", "input_fingerprint"], "left_anti")
             .select("url", doc_id.alias("doc_id")))
 
 

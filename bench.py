@@ -9,8 +9,9 @@
 Two extra report fields beyond the driver contract:
 
 * ``triples_per_sec`` — absolute KG-construction throughput (the
-  north_star metric): total triples materialized / wall seconds for the
-  full pages->parse->triples DAG.
+  north_star metric): canonical triples / wall seconds for the full
+  ``pipeline.flagship`` DAG (pages->parse->triples->sameAs
+  canonicalization), median of 3 runs on the bench session.
 * ``scaling`` — the north_rule two-cluster-size evidence, sandbox
   stand-in per the driver instruction: the same triple-extraction job at
   ``local[8]`` and ``local[32]`` (fresh JVM each, via subprocess),
@@ -220,7 +221,7 @@ def _cpu_times() -> tuple[int, int]:
 
 
 def _throughput_job(sf_dir: str, master: str, replicate: int = 32) -> dict:
-    """Run the full KG triple-extraction DAG once; return timing.
+    """Run the flagship KG-construction DAG once; return timing.
 
     The input is the sf documents table replicated ``replicate``x
     (deterministic, identical at every parallelism level) so the job is
@@ -228,18 +229,14 @@ def _throughput_job(sf_dir: str, master: str, replicate: int = 32) -> dict:
     sandbox stand-in for a real N-vs-4N cluster comparison.  The
     result carries the host-wide steal%% observed during the timed
     window so the caller can reject co-tenant-contaminated legs."""
-    from pyspark.sql import functions as F
     from ferenda_spark.session import get_spark
     from ferenda_spark.corpus import pages_from_documents
-    from ferenda_spark.pipeline import corpus_triples
-    from ferenda_spark.operators.extract import extract_pages
-    from ferenda_spark.operators.triples import with_doc_metadata
+    from ferenda_spark.pipeline import flagship
 
     spark = get_spark(app="bench-%s" % master, master=master)
     spark.sparkContext.setLogLevel("ERROR")
     # warm the JVM/Arrow path so we measure the job, not interpreter boot
     spark.range(1000).selectExpr("sum(id)").collect()
-    t0 = time.time()
     docs = spark.read.parquet(sf_dir.rstrip("/") + "/documents.parquet")
     if replicate > 1:
         docs = docs.crossJoin(spark.range(replicate))
@@ -251,11 +248,7 @@ def _throughput_job(sf_dir: str, master: str, replicate: int = 32) -> dict:
     pages.count()
     tot0, st0 = _cpu_times()
     t0 = time.time()
-    # materialize the parse stage once before the triples fan-out
-    # (doc/section/mention/entity branches) — the cluster analogue is
-    # the Iceberg stage table each branch reads back
-    parsed = with_doc_metadata(extract_pages(pages)).localCheckpoint()
-    n_triples = corpus_triples(spark, parsed).count()
+    n_triples = flagship(spark, pages).count()
     dt = time.time() - t0
     tot1, st1 = _cpu_times()
     spark.stop()
@@ -469,15 +462,17 @@ def main() -> int:
         spreads[name] = [round(samples[0], 3), round(samples[-1], 3)]
     timings["kg_parse_pages"] = round(parse_s, 3)
 
-    # absolute throughput on the already-running session (cached parse
-    # excluded: count the end-to-end DAG separately below in scaling).
-    # Median of 3 runs: a single-shot number swings 2x with ambient
-    # co-tenant load (observed 68k-119k t/s for identical binaries)
+    # absolute throughput of the whole flagship (parse included) on the
+    # already-running session.  Median of 3 runs: a single-shot number
+    # swings 2x with ambient co-tenant load (observed 68k-119k t/s for
+    # identical binaries)
     import statistics
+    from ferenda_spark.corpus import load_pages
+    from ferenda_spark.pipeline import flagship
     reps = []
     for _ in range(3):
         t0 = time.time()
-        n_triples = entry._triples(spark, args.sf).count()
+        n_triples = flagship(spark, load_pages(spark, args.sf)).count()
         reps.append(n_triples / max(time.time() - t0, 1e-9))
     tput = statistics.median(reps)
     total = round(sum(timings.values()), 3)

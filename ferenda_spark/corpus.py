@@ -38,7 +38,6 @@ import textwrap
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from .htmlelements import extract_document
 from .textutil import normalize_space
@@ -218,26 +217,3 @@ def load_pages(spark, sf_dir: str):
     if docs.rdd.getNumPartitions() < target:
         docs = docs.repartition(target)
     return pages_from_documents(docs)
-
-
-def partition_by_url_prefix(pages, n_partitions: int = None,
-                            prefix_len: int = 24,
-                            url_col: str = "url"):
-    """Range-partition a pages frame on a fixed-length url prefix —
-    the north-rule layout for hot-domain skew: consecutive urls of
-    one site land in a bounded run of partitions (range boundaries
-    come from sampling, so a hot prefix is SPLIT across several
-    partitions rather than hashed into one), and downstream per-host
-    work inherits locality without a hash-hot partition.
-
-    On real Iceberg this is the write-time clustering of the pages
-    table; here it is applied on load.  Returns the frame with the
-    helper column removed."""
-    if n_partitions is None:
-        n_partitions = pages.sparkSession.sparkContext \
-            .defaultParallelism * 2
-    return (pages
-            .withColumn("__urlp", F.substring(F.col(url_col), 1,
-                                              prefix_len))
-            .repartitionByRange(n_partitions, "__urlp", url_col)
-            .drop("__urlp"))

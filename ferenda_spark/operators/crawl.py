@@ -1242,6 +1242,11 @@ def opic_priorities(edges: DataFrame, rounds: int = 3,
     integer init drops is documented, not hidden).  Every quantity
     is a long, so any SQL engine replays the rounds bit-for-bit.
 
+    The edge list is ``distinct()``-ed first: parallel edges (the
+    same src -> dst link listed more than once) collapse into one
+    outlink, so a page with two links to one target sends that target
+    one share, and out-degree counts distinct targets.
+
     Scale shape per round: one filtered projection (share), one
     edge-keyed join + dst groupBy (the only shuffle, keyed on the
     node id), one node-keyed left join to fold receipts back into

@@ -1,37 +1,38 @@
-"""Resumable-batch machinery: per-stage checkpoint `entries` table +
-anti-join work selection + per-partition lineage counters.
+"""Resumable stages over snapshot tables: fingerprint anti-join work
+selection + one atomic commit per stage batch + per-partition lineage
+counters.
 
 The reference's incremental contract (SURVEY.md §2.9, X1/I1-I5):
 `DocumentStore.needed` skips documents whose output is newer than the
 input (documentstore.py:324-357); `DocumentEntry` records per-(action,
 basefile) status/duration (documententry.py:27-104).  Spark
-restatement:
+restatement (:func:`run_stage_atomic`):
 
-* each stage writes its outputs *and* an entries batch
-  ``(url, stage, input_fingerprint, success, ts, duration_s, error)``;
-* on (re)start the stage's work set = inputs **anti-joined** against
-  successful entries on (url, input_fingerprint) — a kill mid-run
-  costs only the partitions whose entries batch never committed;
-* fingerprint = md5(html) (download_is_different semantics,
-  documentrepository.py:1010-1015) so changed pages reprocess and
+* a stage's output table is a snapshot table (snaptable.py) under
+  ``<store>/<stage>_snap``, and every output row carries the
+  ``(url, input_fingerprint)`` of the input it came from — the output
+  IS the entries bookkeeping, there is no second table;
+* fingerprint = md5 of the stage's input payload (md5(html) for the
+  parse stage: download_is_different semantics,
+  documentrepository.py:1010-1015), so changed pages reprocess and
   unchanged ones don't (I5);
-* ``lastdownload``-style watermark = max(warc_ts) (I2).
+* on (re)start the stage's work set = inputs **anti-joined** against
+  the committed ``(url, input_fingerprint)`` pairs;
+* the batch lands as ONE conditional snapshot commit, so a kill
+  anywhere before the metadata publish leaves the table unchanged and
+  the whole batch re-runs; per-batch history gives downstream stages
+  exactly the delta (``table.incremental``).
 
-The sandbox store is parquet-append per stage (Iceberg's atomic commit
-is the production analogue, noted in session.py); commits are
-idempotent because outputs are deterministic functions of inputs (S5).
+Snapshot tables are the sandbox stand-in for Iceberg's atomic commit
+(noted in session.py); commits stay idempotent because outputs are
+deterministic functions of inputs (S5).
 """
 
 from __future__ import annotations
 
 import os
-import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-ENTRIES_SCHEMA = ("url string, stage string, input_fingerprint string, "
-                  "success string, ts timestamp, duration_s double, "
-                  "error string")
+from pyspark.sql import DataFrame, functions as F
 
 
 def fingerprinted(pages: DataFrame,
@@ -44,55 +45,6 @@ def fingerprinted(pages: DataFrame,
                             F.md5(F.col(source_col).cast("binary")))
 
 
-def pending_work(pages_fp: DataFrame, entries: DataFrame | None,
-                 stage: str) -> DataFrame:
-    """needed-semantics work selection: anti-join inputs against
-    successful checkpoint entries for this stage."""
-    if entries is None:
-        return pages_fp
-    done = (entries
-            .where((F.col("stage") == stage)
-                   & (F.col("success") == "true"))
-            .select("url", "input_fingerprint"))
-    return pages_fp.join(done, ["url", "input_fingerprint"], "left_anti")
-
-
-def read_entries(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    path = os.path.join(store_dir, "entries")
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
-
-
-def write_entries(results: DataFrame, store_dir: str, stage: str,
-                  duration_s: float) -> None:
-    """Append one entries batch for the rows just processed; `error`
-    column (nullable) marks quarantined rows (success='false')."""
-    path = os.path.join(store_dir, "entries")
-    err = F.col("error") if "error" in results.columns \
-        else F.lit(None).cast("string")
-    (results
-     .select("url", "input_fingerprint",
-             err.alias("error"))
-     # stages whose output has several rows per input (e.g. triples)
-     # still get ONE entry per (url, fingerprint) checkpoint row
-     .distinct()
-     .withColumn("stage", F.lit(stage))
-     .withColumn("success",
-                 F.when(F.col("error").isNull(), "true").otherwise("false"))
-     .withColumn("ts", F.current_timestamp())
-     .withColumn("duration_s", F.lit(float(duration_s)))
-     .select("url", "stage", "input_fingerprint", "success", "ts",
-             "duration_s", "error")
-     .write.mode("append").parquet(path))
-
-
-def watermark(pages: DataFrame) -> "object":
-    """I2: lastdownload cursor = max(warc_ts)."""
-    return pages.agg(F.max("warc_ts")).first()[0]
-
-
 def stage_counters(results: DataFrame) -> DataFrame:
     """A10/north-rule lineage: per-partition row/error counters."""
     return (results
@@ -103,47 +55,21 @@ def stage_counters(results: DataFrame) -> DataFrame:
                        .otherwise(0)).alias("errors")))
 
 
-def run_stage(pages: DataFrame, store_dir: str, stage: str,
-              transform, output_name: str | None = None,
-              source_col: str = "html") -> DataFrame:
-    """Checkpointed stage execution: select pending work, transform,
-    write outputs + entries atomically-enough (outputs first, entries
-    last — a crash between the two re-does at most one batch, which is
-    idempotent).
-
-    The transform runs ONCE: the batch is materialized with
-    ``localCheckpoint`` before the output write, so the entries batch
-    is derived from the materialized blocks instead of re-executing the
-    transform DAG (which would double every stage's cost at scale).  On
-    a cluster the production analogue is reading back the Iceberg
-    snapshot's added files; the checkpoint is the single-JVM stand-in."""
-    spark = pages.sparkSession
-    fp = fingerprinted(pages, source_col)
-    entries = read_entries(spark, store_dir)
-    todo = pending_work(fp, entries, stage)
-    t0 = time.time()
-    out = transform(todo).localCheckpoint()
-    out_path = os.path.join(store_dir, output_name or stage)
-    out.write.mode("append").parquet(out_path)
-    done = out.select("url", "input_fingerprint", *(
-        ["error"] if "error" in out.columns else []))
-    write_entries(done, store_dir, stage, time.time() - t0)
-    return spark.read.parquet(out_path)
-
-
 def run_stage_atomic(pages: DataFrame, store_dir: str, stage: str,
                      transform, source_col: str = "html",
                      retry_errors: bool = False):
-    """:func:`run_stage` with the checkpoint protocol upgraded to a
-    single atomic snapshot commit (snaptable.py): the output table IS
-    the entries table — pending work anti-joins against the distinct
-    ``(url, input_fingerprint)`` pairs already in the committed
-    outputs.  Because there is only ONE commit, the crash window of
-    the two-write protocol (outputs landed, entries not) disappears: a
-    kill anywhere before the metadata publish leaves the table
-    byte-identical and the whole batch simply re-runs, with no
-    duplicate output rows ever visible.  Downstream stages can consume
-    exactly the delta via ``table.incremental(spark, prev, new)``.
+    """Checkpointed stage execution: fingerprint ``pages`` on
+    ``source_col``, select the pending work, run ``transform`` once
+    (materialized with ``localCheckpoint``) and commit its output as
+    one atomic snapshot (snaptable.py) of ``<store_dir>/<stage>_snap``.
+    The output table is its own bookkeeping: pending work anti-joins
+    against the distinct ``(url, input_fingerprint)`` pairs already in
+    the committed outputs, so ``transform`` must keep both columns.
+    With only ONE commit there is no crash window: a kill anywhere
+    before the metadata publish leaves the table byte-identical and
+    the whole batch simply re-runs, with no duplicate output rows ever
+    visible.  Downstream stages can consume exactly the delta via
+    ``table.incremental(spark, prev, new)``.
 
     Quarantined rows (``error`` non-null) count as processed by
     default: a permanently-poisoned page must NOT re-run — and

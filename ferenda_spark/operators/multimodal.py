@@ -754,7 +754,8 @@ def mp4_meta_bytes(b: bytes) -> dict | None:
     header boxes are touched — the ``mdat`` payload is never read,
     the same fetch-the-first-few-KB discipline as :func:`wav_meta
     _bytes` (a 100 TB video scan reads headers, not streams).
-    Returns None for non-BMFF input."""
+    Boxes with an empty body (a blob truncated right after a box
+    header) are skipped.  Returns None for non-BMFF input."""
     if len(b) < 16 or b[4:8] != b"ftyp":
         return None
     timescale = duration = None
@@ -771,6 +772,9 @@ def mp4_meta_bytes(b: bytes) -> dict | None:
             if sz < 8 or i + sz > hi:
                 return
             c = i + 8
+            if c == i + sz:                  # bare header, empty body
+                i += sz
+                continue
             if typ in (b"moov", b"trak", b"mdia") and depth < 4:
                 walk(c, i + sz, depth + 1)
             elif typ == b"mvhd" and timescale is None:

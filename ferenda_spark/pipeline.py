@@ -1,20 +1,25 @@
 """End-to-end DAG assembly: pages -> parsed docs -> triples ->
-canonicalized triples -> derived tables (SURVEY.md §3.1 restated)."""
+canonicalized triples (SURVEY.md §3.1 restated).
+
+:func:`flagship` is the one definition of the KG-construction job;
+``bench.py``, ``scripts/submit_flagship.py`` and the query registry's
+KG queries all build from the functions here."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .corpus import load_pages, pages_from_documents
+from . import catalog
 from .operators.canonicalize import rewrite_canonical, sameas_components
 from .operators.extract import extract_pages
-from .operators.facets import faceted_data
+from .operators.incremental import run_stage_atomic
 from .operators.linking import build_resources, entity_mention_triples
-from .operators.triples import all_triples, with_doc_metadata
+from .operators.triples import TRIPLE_COLS, all_triples, with_doc_metadata
 
 
-def parsed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return with_doc_metadata(extract_pages(load_pages(spark, sf_dir)))
+def parsed_docs(pages: DataFrame) -> DataFrame:
+    """The parse stage: extracted documents plus doc metadata."""
+    return with_doc_metadata(extract_pages(pages))
 
 
 def corpus_triples(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -39,94 +44,46 @@ def canonical_triples(spark: SparkSession, docs: DataFrame,
     return rewrite_canonical(t, mapping)
 
 
-def staged_flagship(spark: SparkSession, sf_dir: str,
-                    store_dir: str) -> DataFrame:
-    """The flagship DAG as a CHAIN of resumable checkpointed stages
-    (north rule: every stage checkpoints with lineage so the run
-    resumes mid-DAG): pages -[parse]-> parsed docs -[triples]->
-    doc/section/mention triples.
+def flagship(spark: SparkSession, pages: DataFrame,
+             store: str | None = None) -> DataFrame:
+    """The KG-construction job: pages -> parse -> doc/section/mention/
+    entity triples -> sameAs canonicalization.
 
-    * each stage is a :func:`operators.incremental.run_stage` call
-      with its OWN input fingerprint (md5(html) for parse, md5(text)
-      for triples), so a change anywhere reprocesses exactly the
-      affected documents in exactly the affected stages;
-    * a kill between stages costs only the unfinished stage — the
-      finished stage's entries anti-join selects zero rows on rerun
-      (pinned by test_staged_flagship_resumes_between_stages);
-    * triple rows keep (url, input_fingerprint) columns: per-row
-      lineage back to the exact page bytes that produced them (the
-      counters view is operators.incremental.stage_counters)."""
-    from pyspark.sql import functions as F
+    Without ``store`` the parse is materialized once (localCheckpoint)
+    before the triples fan-out, whose branches would otherwise each
+    re-run the Python parse, and the canonical triples come back lazy.
 
-    from .corpus import partition_by_url_prefix
-    from .operators.incremental import run_stage
-    from .operators.triples import all_triples
-
-    # north-rule layout: range-partition the crawl on a url prefix so
-    # hot domains are SPLIT across a bounded partition run (sampled
-    # range boundaries) instead of hashed into one partition
-    pages = partition_by_url_prefix(load_pages(spark, sf_dir))
+    With ``store`` (a writable directory) parse and triples are
+    resumable snapshot stages (:func:`run_stage_atomic`, tables
+    ``parse_snap`` and ``triples_snap``): a rerun processes only pages
+    whose bytes changed, a kill loses at most the uncommitted batch of
+    one stage, and every triple row of ``triples_snap`` keeps the
+    ``(url, input_fingerprint)`` of the page that produced it.  The
+    canonical graph is rebuilt from the committed triples, written with
+    :func:`catalog.write_triples` to ``<store>/triples``, and read
+    back."""
+    if store is None:
+        return canonical_triples(spark,
+                                 parsed_docs(pages).localCheckpoint())
 
     def parse_t(todo):
-        return (extract_pages(todo)
-                .join(todo.select("url", "input_fingerprint"), "url"))
+        return parsed_docs(todo).join(
+            todo.select("url", "input_fingerprint"), "url")
 
-    parsed = run_stage(pages, store_dir, "parse", parse_t)
-
-    def triples_t(todo):
-        t = all_triples(with_doc_metadata(todo))
-        lineage = todo.select(F.col("url"), "input_fingerprint")
-        return t.join(lineage, t["context"] == lineage["url"])
-
-    return run_stage(parsed.drop("input_fingerprint"), store_dir,
-                     "triples", triples_t, source_col="text")
-
-
-def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The headline analytic: full KG construction then the faceted
-    pivot (documents per publisher/year — ferenda's faceted_data).
-
-    The parse stage is materialized once before the triples fan-out
-    (doc/section/mention/entity branches would otherwise each re-run
-    the Python parse); the cluster analogue is each stage writing to
-    and reading back an Iceberg table."""
-    docs = parsed_docs(spark, sf_dir).localCheckpoint()
-    triples = corpus_triples(spark, docs)
-    return faceted_data(triples)
-
-
-def staged_flagship_atomic(spark: SparkSession, sf_dir: str,
-                           store_dir: str):
-    """:func:`staged_flagship` with every stage checkpoint upgraded to
-    the single-commit snapshot protocol (north rule: "every stage
-    checkpoints ... so the DAG is resumable mid-run", through real
-    atomic commits): a kill anywhere loses at most the uncommitted
-    stage batch, reruns reprocess exactly the pending inputs of
-    exactly the affected stages, and each stage table carries
-    time-travelable per-batch history (snaptable.history()).
-
-    Returns ``(triples_df, parse_table, triples_table)``."""
-    from pyspark.sql import functions as F
-
-    from .operators.extract import extract_pages
-    from .operators.incremental import run_stage_atomic
-    from .operators.triples import all_triples, with_doc_metadata
-
-    pages = load_pages(spark, sf_dir)
-
-    def parse_t(todo):
-        return (extract_pages(todo)
-                .join(todo.select("url", "input_fingerprint"), "url"))
-
-    parsed, ptab, _ = run_stage_atomic(pages, store_dir, "parse",
-                                       parse_t)
+    parsed, _, _ = run_stage_atomic(pages, store, "parse", parse_t)
 
     def triples_t(todo):
-        t = all_triples(with_doc_metadata(todo))
-        lineage = todo.select(F.col("url"), "input_fingerprint")
-        return t.join(lineage, t["context"] == lineage["url"])
+        lineage = todo.select(F.col("url").alias("context"), "url",
+                              "input_fingerprint")
+        return corpus_triples(spark, todo).join(lineage, "context")
 
-    out, ttab, _ = run_stage_atomic(parsed.drop("input_fingerprint"),
-                                    store_dir, "triples", triples_t,
-                                    source_col="text")
-    return out, ptab, ttab
+    # the triples stage keys on the parse fingerprint, never null: a
+    # quarantined page has no text, and md5(NULL) would leave it
+    # pending (and re-committed) on every rerun
+    triples, _, _ = run_stage_atomic(parsed, store, "triples", triples_t,
+                                     source_col="input_fingerprint")
+    t = triples.select(*TRIPLE_COLS)
+    catalog.write_triples(rewrite_canonical(t, sameas_components(t)),
+                          store)
+    return (catalog.read_stage(spark, store, "triples")
+            .drop("context_bucket"))

@@ -7,21 +7,22 @@ natural Spark shape is a continuous pipeline: new/changed page files
 land in the input table's directory, a file-source stream picks up
 each file exactly once (checkpointed source offsets), and every
 micro-batch runs the SAME incremental stage machinery — fingerprint
-anti-join + entries checkpoint (operators/incremental.py) — via
-``foreachBatch``.  The two dedup layers compose: source offsets stop
-the same *file* from being read twice, the fingerprint anti-join stops
-the same *content* from being reprocessed even when re-delivered in a
-new file (conditional-fetch semantics, S2/I5).
+anti-join + one snapshot commit (operators/incremental.py) — via
+``foreachBatch``.  The dedup layers compose: source offsets stop the
+same *file* from being read twice, the snapshot commit is
+all-or-nothing, and the fingerprint anti-join stops the same *content*
+from being reprocessed even when re-delivered in a new file
+(conditional-fetch semantics, S2/I5).
 
 * :func:`stream_pages` — file-source ``readStream`` over the pages
   layout.
-* :func:`run_streaming_ingest` — ``foreachBatch(run_stage)`` with the
-  ``availableNow`` trigger: drains everything currently available then
-  stops — the restartable catch-up run (the cron analogue); a
-  production deployment switches to a processing-time trigger and the
-  same code runs continuously.  ``foreachBatch`` rather than a direct
+* :func:`run_streaming_ingest` — ``foreachBatch(run_stage_atomic)``
+  with the ``availableNow`` trigger: drains everything currently
+  available then stops — the restartable catch-up run (the cron
+  analogue); a production deployment switches to a processing-time
+  trigger and the same code runs continuously.  ``foreachBatch`` rather than a direct
   sink because the needed-work anti-join reads a batch-side table (the
-  entries checkpoint), which declarative streaming sinks can't
+  committed stage snapshot), which declarative streaming sinks can't
   express.
 * :func:`windowed_event_counts` — watermarked tumbling-window
   aggregation over an event stream: the streaming analogue of the
@@ -50,17 +51,22 @@ def stream_pages(spark: SparkSession, input_dir: str,
 def run_streaming_ingest(spark: SparkSession, input_dir: str,
                          store_dir: str, transform,
                          stage: str = "parse") -> None:
-    """Drain all currently-available page files through the
-    checkpointed incremental stage, then stop (availableNow).
-    Restart-safe twice over: the stream checkpoint skips files already
-    consumed, and run_stage's fingerprint anti-join skips page
-    contents already processed."""
-    from .operators.incremental import run_stage
+    """Drain all currently-available page files through the resumable
+    stage (operators.incremental.run_stage_atomic), then stop
+    (availableNow).  Each micro-batch lands as ONE atomic snapshot
+    commit of ``<store_dir>/<stage>_snap``, so three dedup layers
+    compose — stream-source offsets skip consumed files, the snapshot
+    commit is all-or-nothing (a kill mid-batch leaves no partial
+    outputs to reconcile), and the fingerprint anti-join skips
+    re-delivered page contents.  The output table additionally carries
+    per-batch history: ``table.incremental(prev, new)`` hands
+    downstream exactly one micro-batch's rows."""
+    from .operators.incremental import run_stage_atomic
 
     def _batch(df: DataFrame, epoch_id: int) -> None:
         if df.isEmpty():
             return
-        run_stage(df, store_dir, stage, transform)
+        run_stage_atomic(df, store_dir, stage, transform)
 
     q = (stream_pages(spark, input_dir)
          .writeStream
@@ -173,36 +179,6 @@ def windowed_event_counts(events: DataFrame, ts_col: str = "ts",
             .select(F.col("w.start").alias("window_start"),
                     F.col("w.end").alias("window_end"),
                     "event_type", "n_events"))
-
-
-def run_streaming_ingest_atomic(spark: SparkSession, input_dir: str,
-                                store_dir: str, transform,
-                                stage: str = "parse") -> None:
-    """:func:`run_streaming_ingest` with the per-batch checkpoint
-    upgraded to the single-commit snapshot protocol
-    (operators.incremental.run_stage_atomic): each micro-batch lands
-    as ONE atomic snapshot commit, so the three dedup layers compose —
-    stream-source offsets skip consumed files, the snapshot commit is
-    all-or-nothing (a kill mid-batch leaves no partial outputs to
-    reconcile), and the fingerprint anti-join skips re-delivered page
-    contents.  The output table additionally carries per-batch
-    history: ``table.incremental(prev, new)`` hands downstream exactly
-    one micro-batch's rows."""
-    from .operators.incremental import run_stage_atomic
-
-    def _batch(df: DataFrame, epoch_id: int) -> None:
-        if df.isEmpty():
-            return
-        run_stage_atomic(df, store_dir, stage, transform)
-
-    q = (stream_pages(spark, input_dir)
-         .writeStream
-         .foreachBatch(_batch)
-         .option("checkpointLocation",
-                 os.path.join(store_dir, "_stream_ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
 
 
 def run_streaming_dedup_ingest(spark: SparkSession, input_dir: str,

@@ -10,13 +10,18 @@ cluster").  Usage::
 
 The session comes from spark-submit's own conf (getOrCreate) — the
 library never overrides master/memory settings handed down by the
-launcher.  The job materializes the canonical triples to the store
-(bucketed parquet; on a cluster the same writer targets an Iceberg
-table) plus the per-partition lineage counters, then prints one JSON
-line with row counts and wall time so submissions are scriptable."""
+launcher.  The job is ``pipeline.flagship`` with ``--out`` as its
+store: parse and triples commit as resumable snapshot stages
+(``parse_snap``, ``triples_snap``), so re-submitting after a kill
+reprocesses only the pending inputs of the unfinished stage, and the
+canonical triples land in ``<out>/triples`` (bucketed parquet; on a
+cluster the same writer targets an Iceberg table).  It prints one JSON
+line with row counts, snapshot counts and wall time so submissions
+are scriptable."""
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -25,42 +30,28 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", required=True, help="pages/documents dir")
     ap.add_argument("--out", required=True, help="store dir (writable)")
-    ap.add_argument("--triples-table", default="canonical_triples")
-    ap.add_argument("--staged", action="store_true",
-                    help="run the parse->triples chain through atomic "
-                         "snapshot-commit stages (resumable mid-run: "
-                         "re-submitting after a kill reprocesses only "
-                         "the pending inputs of the unfinished stage)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
     spark = SparkSession.builder.appName(
         "ferenda-spark-flagship").getOrCreate()
 
-    from ferenda_spark import catalog, pipeline
+    from ferenda_spark.corpus import load_pages
+    from ferenda_spark.pipeline import flagship
+    from ferenda_spark.snaptable import SnapshotTable
     t0 = time.time()
-    if args.staged:
-        triples, ptab, ttab = pipeline.staged_flagship_atomic(
-            spark, args.sf, args.out)
-        n = triples.count()
-        extra = {"parse_snapshots": len(ptab.history()),
-                 "triples_snapshots": len(ttab.history())}
-    else:
-        docs = pipeline.parsed_docs(spark, args.sf).localCheckpoint()
-        triples = pipeline.canonical_triples(spark, docs)
-        catalog.write_triples(triples, args.out, args.triples_table)
-        back = catalog.read_stage(spark, args.out, args.triples_table)
-        n = back.count()
-        extra = {}
+    n = flagship(spark, load_pages(spark, args.sf), store=args.out).count()
     wall = time.time() - t0
     print(json.dumps({
-        "job": "flagship-staged" if args.staged else "flagship",
+        "job": "flagship",
         "sf": args.sf, "out": args.out,
         "triples": n, "wall_sec": round(wall, 2),
         "triples_per_sec": round(n / wall, 1),
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
-        **extra,
+        **{"%s_snapshots" % s: len(SnapshotTable(
+            os.path.join(args.out, s + "_snap")).history())
+           for s in ("parse", "triples")},
     }))
     spark.stop()
     return 0 if n > 0 else 1

@@ -105,19 +105,60 @@ def test_full_dag_end_to_end(spark, tmpdir):
     assert dumped == expect
 
 
-def test_staged_flagship_atomic_resume(spark, tmpdir):
-    """Re-running the snapshot-staged flagship is a no-op: both stage
-    tables keep exactly one snapshot and the triples are unchanged."""
-    from ferenda_spark.pipeline import staged_flagship_atomic
+def test_flagship_store_rerun_is_noop(spark, tmpdir):
+    """Re-running the store-backed flagship is a no-op: both stage
+    tables keep exactly one snapshot and the triples are unchanged,
+    also with a quarantined page (no text) in the input."""
+    import datetime
 
-    sf = "/root/testdata/sf0.001"
-    t1, ptab, ttab = staged_flagship_atomic(spark, sf, tmpdir)
-    n = t1.count()
+    from ferenda_spark.corpus import load_pages
+    from ferenda_spark.pipeline import flagship
+    from ferenda_spark.snaptable import SnapshotTable
+
+    pages = load_pages(spark, "/root/testdata/sf0.001")
+    # RFC-style <pre> text without an RFC header fails the parse FSM
+    bad_url = "https://example.org/docs/bad/999999"
+    bad = spark.createDataFrame(
+        [(bad_url, datetime.datetime(2024, 1, 1),
+          b"<pre>no header here</pre>", "no header here", "en")],
+        pages.schema)
+    pages = pages.unionByName(bad)
+    ptab = SnapshotTable(os.path.join(tmpdir, "parse_snap"))
+    ttab = SnapshotTable(os.path.join(tmpdir, "triples_snap"))
+    n = flagship(spark, pages, tmpdir).count()
     assert n > 0
+    quarantined = ptab.read(spark).where("error IS NOT NULL")
+    assert [r.url for r in quarantined.collect()] == [bad_url]
     assert len(ptab.history()) == 1 and len(ttab.history()) == 1
-    t2, ptab, ttab = staged_flagship_atomic(spark, sf, tmpdir)
-    assert t2.count() == n
+    assert flagship(spark, pages, tmpdir).count() == n
     assert len(ptab.history()) == 1 and len(ttab.history()) == 1
     # per-row lineage survives: every triple row carries the url +
     # fingerprint of the page bytes that produced it
-    assert {"url", "input_fingerprint"} <= set(t2.columns)
+    assert {"url", "input_fingerprint"} <= set(ttab.read(spark).columns)
+
+
+def test_flagship_staging_keeps_the_graph(spark, tmpdir):
+    """The in-memory and the store-backed flagship build the same
+    graph as the oracle-checked kg_canonical_triples query."""
+    import importlib.util
+
+    from ferenda_spark.corpus import load_pages
+    from ferenda_spark.operators.triples import TRIPLE_COLS
+    from ferenda_spark.pipeline import flagship
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "entry", os.path.join(repo, "__spark_entry__.py"))
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    sf = "/root/testdata/sf0.001"
+    want = (entry.queries()["kg_canonical_triples"](spark, sf)
+            .select(*TRIPLE_COLS).localCheckpoint())
+    n = want.count()
+    assert n > 0
+    for got in (flagship(spark, load_pages(spark, sf)),
+                flagship(spark, load_pages(spark, sf), tmpdir)):
+        got = got.select(*TRIPLE_COLS).localCheckpoint()
+        assert got.count() == n
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0

@@ -156,17 +156,6 @@ def test_sq8_training_is_one_aggregate_no_vector_shuffle(spark, queries):
     assert "BroadcastExchange" in plan
 
 
-def test_url_prefix_layout_is_range_partitioning(spark):
-    """partition_by_url_prefix must produce RangePartitioning on the
-    prefix (sampled boundaries split hot prefixes), never
-    HashPartitioning — the north-rule skew layout."""
-    from ferenda_spark.corpus import load_pages, partition_by_url_prefix
-    df = partition_by_url_prefix(load_pages(spark, SF))
-    txt = _plan(df)
-    assert "rangepartitioning" in txt.lower(), txt
-    assert "__urlp" in txt, txt
-
-
 def test_unit_normalize_broadcasts_unit_table(spark, queries):
     plan = _plan(queries["kg_unit_normalize"](spark, SF))
     # the 8-row unit dimension must broadcast; a shuffled join here
@@ -244,7 +233,7 @@ BNLJ_ALLOWED = frozenset({
     "stats_tost",             # two 1-row cohort frames
     "stats_srm",              # two 1-row cohort frames
     "stats_chi2_lang_source",  # 1-row grand-total frame
-    "stats_gini_domains",     # 1-row corpus aggregate
+    "stats_gini_domains",     # 1-row Lorenz-totals aggregate
     "stats_benford",          # 1-row total-count frame
     "stats_ks_lengths",       # 1-row two-sample sizes frame
     "stats_mann_whitney",     # 1-row group-size frame
@@ -269,7 +258,6 @@ BNLJ_ALLOWED = frozenset({
     "dedup_embedding",        # 1-row corpus-centroid frame
     "stats_psi_drift",        # 1-row split totals
     "stats_cohens_kappa",     # 1-row marginal totals
-    "stats_gini_domains",     # 1-row Lorenz totals
     "train_source_temperature",  # 1-row mixture normalizer
     "train_token_budget",     # 1-row budget scalar
     "train_dsir_weights",     # 1-row importance normalizer

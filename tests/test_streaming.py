@@ -37,43 +37,10 @@ def _write_pages_file(spark, path, rows):
      .coalesce(1).write.mode("append").parquet(path))
 
 
-def test_streaming_ingest_exactly_once_plus_fingerprint(spark, tmpdir):
-    """Batch 1: two pages flow through the stage.  Batch 2 (new file):
-    one genuinely new page + one unchanged re-delivery — the stream
-    checkpoint has consumed the old FILE, the fingerprint anti-join
-    skips the re-delivered CONTENT, so exactly one new row lands."""
-    from ferenda_spark.operators.incremental import read_entries
-    from ferenda_spark.streaming import run_streaming_ingest
-
-    indir = tmpdir + "/in"
-    store = tmpdir + "/store"
-
-    def transform(df):
-        return (df.withColumn("out", F.upper("text"))
-                .select("url", "input_fingerprint", "out"))
-
-    _write_pages_file(spark, indir, [("u1", "aa"), ("u2", "bb")])
-    run_streaming_ingest(spark, indir, store, transform)
-    out = spark.read.parquet(store + "/parse")
-    assert out.count() == 2
-    assert read_entries(spark, store).count() == 2
-
-    # new file: u3 is new, u2 re-delivered with identical content
-    _write_pages_file(spark, indir, [("u3", "cc"), ("u2", "bb")])
-    run_streaming_ingest(spark, indir, store, transform)
-    out2 = spark.read.parquet(store + "/parse")
-    assert sorted(r.url for r in out2.collect()) == ["u1", "u2", "u3"]
-    entries = read_entries(spark, store)
-    assert entries.count() == 3
-
-    # third run with nothing new: no files to consume, no new rows
-    run_streaming_ingest(spark, indir, store, transform)
-    assert spark.read.parquet(store + "/parse").count() == 3
-
-
 def test_streaming_ingest_restart_resumes_from_checkpoint(spark, tmpdir):
     """A fresh query (new awaitTermination lifecycle) against the same
     checkpoint consumes only files that arrived since the last run."""
+    from ferenda_spark.snaptable import SnapshotTable
     from ferenda_spark.streaming import run_streaming_ingest
 
     indir = tmpdir + "/in"
@@ -87,8 +54,8 @@ def test_streaming_ingest_restart_resumes_from_checkpoint(spark, tmpdir):
     _write_pages_file(spark, indir, [("b", "2")])
     _write_pages_file(spark, indir, [("c", "3")])
     run_streaming_ingest(spark, indir, store, transform)
-    got = sorted(r.url
-                 for r in spark.read.parquet(store + "/parse").collect())
+    got = sorted(r.url for r in
+                 SnapshotTable(store + "/parse_snap").read(spark).collect())
     assert got == ["a", "b", "c"]
 
 
@@ -236,7 +203,7 @@ def test_streaming_ingest_atomic_snapshot_per_batch(spark, tmpdir):
     committed outputs, and the table's history hands downstream
     exactly the per-batch delta."""
     from ferenda_spark.snaptable import SnapshotTable
-    from ferenda_spark.streaming import run_streaming_ingest_atomic
+    from ferenda_spark.streaming import run_streaming_ingest
 
     indir = tmpdir + "/in"
     store = tmpdir + "/store"
@@ -246,7 +213,7 @@ def test_streaming_ingest_atomic_snapshot_per_batch(spark, tmpdir):
                 .select("url", "input_fingerprint", "out"))
 
     _write_pages_file(spark, indir, [("u1", "aa"), ("u2", "bb")])
-    run_streaming_ingest_atomic(spark, indir, store, transform)
+    run_streaming_ingest(spark, indir, store, transform)
     tab = SnapshotTable(store + "/parse_snap")
     assert tab.read(spark).count() == 2
     h1 = tab.history()
@@ -254,7 +221,7 @@ def test_streaming_ingest_atomic_snapshot_per_batch(spark, tmpdir):
 
     # u3 new, u2 re-delivered identical -> one-row second snapshot
     _write_pages_file(spark, indir, [("u3", "cc"), ("u2", "bb")])
-    run_streaming_ingest_atomic(spark, indir, store, transform)
+    run_streaming_ingest(spark, indir, store, transform)
     h2 = tab.history()
     assert [h["added_rows"] for h in h2] == [2, 1]
     delta = tab.incremental(spark, h2[0]["snapshot_id"],
@@ -262,7 +229,7 @@ def test_streaming_ingest_atomic_snapshot_per_batch(spark, tmpdir):
     assert [(r.url, r.out) for r in delta.collect()] == [("u3", "CC")]
 
     # nothing new: stream consumes nothing, no empty commit
-    run_streaming_ingest_atomic(spark, indir, store, transform)
+    run_streaming_ingest(spark, indir, store, transform)
     assert len(tab.history()) == 2
 
 

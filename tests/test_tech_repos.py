@@ -95,6 +95,26 @@ def test_mp4_mvhd_v1_and_largesize():
     assert m["duration_ms"] == 1200 * 1000 // 600
 
 
+def test_mp4_truncated_empty_header_box_is_skipped():
+    """A blob truncated right after a bare 8-byte mvhd or tkhd header
+    must not raise (an IndexError would fail the whole video_meta
+    task): the empty box is skipped."""
+    from ferenda_spark.operators.multimodal import mp4_meta_bytes
+    import struct
+
+    def box(typ, body=b""):
+        return struct.pack(">I4s", 8 + len(body), typ) + body
+
+    ftyp = box(b"ftyp", b"isom\x00\x00\x00\x00")
+    assert mp4_meta_bytes(ftyp + box(b"moov", box(b"mvhd"))) is None
+    # version-0 mvhd: version/flags, two u32 times, timescale, duration
+    mvhd = box(b"mvhd", b"\x00" * 12 + struct.pack(">II", 1000, 5000))
+    m = mp4_meta_bytes(ftyp + box(b"moov", mvhd
+                                  + box(b"trak", box(b"tkhd"))))
+    assert (m["timescale"], m["duration_ms"]) == (1000, 5000)
+    assert (m["width"], m["height"]) == (0, 0)
+
+
 def test_mp4_rejects_non_bmff():
     from ferenda_spark.operators.multimodal import mp4_meta_bytes
     assert mp4_meta_bytes(b"") is None
