@@ -284,7 +284,7 @@ def _q_events_sessions(spark, sf_dir):
 def _q_wiki_links(spark, sf_dir):
     """S8 wiki branch end-to-end through Spark: deterministic
     per-document MediaWiki export XML -> the real wiki_pages
-    mapInPandas stage (dump parse, template strip, category + link
+    map_rows stage (dump parse, template strip, category + link
     extraction) -> exploded link rows; the oracle recomputes the
     closed-form expectation in SQL."""
     from ferenda_spark.wikitext import wiki_pages
@@ -1249,7 +1249,7 @@ def _q_sparql_annotations(spark, sf_dir):
 
 def _q_pdf_textbox_stats(spark, sf_dir):
     """S8 PDF branch driver query: a closed-form pdf2xml column (JVM
-    concat, no UDF) through the pdf_textboxes mapInPandas stage
+    concat, no UDF) through the pdf_textboxes map_rows stage
     (pdfpages.py — pdfreader._parse_xml semantics), then per-document
     layout stats.  Every 23rd document carries malformed XML and is
     quarantined by the stage (I4), so it is absent from the output."""
@@ -1344,7 +1344,7 @@ def _q_word_docs(spark, sf_dir):
     Word97 .doc binaries every 17th doc (native stdlib CFB +
     piece-table extraction, docbinary.py), and a truncated-OLE
     quarantine row every 34th, through the extract_word_blobs
-    mapInPandas stage (reference wordreader.py:100-218)."""
+    map_rows stage (reference wordreader.py:100-218)."""
     from ferenda_spark.wordreader import (extract_word_blobs,
                                           synth_docx_blobs)
     d = _read(spark, sf_dir, "documents").select("doc_id")
@@ -1434,7 +1434,7 @@ def _q_hot_domain_links_salted(spark, sf_dir):
 def _q_wiki_rendered(spark, sf_dir):
     """S8 wiki render branch: closed-form synthetic wikitext (italics,
     internal link, section heading, bold, category) through the
-    wiki_render mapInPandas stage — markup -> XHTML body + section
+    wiki_render map_rows stage — markup -> XHTML body + section
     count + dcterms:subject names (wiki.py parse_document_from_soup +
     postprocess; fixture-level golden parity in
     tests/test_wikitext.py)."""

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract): run the headline queries at
+"""Benchmark harness (driver contract): run every registered query at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line::
 
@@ -31,182 +31,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    # KG construction core (the engine's raison d'etre)
-    "kg_doc_triples", "kg_section_triples", "kg_mention_triples",
-    "kg_entity_mentions", "kg_triples_by_pred", "kg_faceted_data",
-    "kg_sameas_canonical", "kg_toc_pagesets", "kg_api_stats",
-    "kg_ispartof_closure", "kg_citation_counts", "kg_pagerank",
-    "kg_fuzzy_entity_links", "kg_fuzzy_links_lsh",
-    "kg_canonical_triples", "kg_sparql_bgp", "kg_sparql_construct",
-    "kg_sparql_path", "kg_sparql_agg", "kg_hits", "kg_legal_mentions",
-    # source/reader stages (r3: oracle-backed driver queries)
-    "pdf_textbox_stats", "pdf_extracted_lines", "pdf_section_triples",
-    "word_docs", "wiki_rendered", "warc_pages", "kg_hot_domain_links_salted",
-    # relational / windowed analytics
-    "tpch_pricing_summary", "top_revenue_orders", "latest_event_per_user",
-    "feed_archive_pages", "event_type_user_stats", "events_sessions",
-    "events_windowed_counts", "wiki_links",
-    # training-data-pipeline ops
-    "dedup_exact", "dedup_minhash_pairs", "dedup_jaccard_pairs",
-    "dedup_simhash", "text_quality", "text_lang_id", "text_fingerprint",
-    "sim_cosine_topk", "sim_lsh_topk", "sim_ivf_topk", "dedup_embedding",
-    "mm_image_meta", "search_documents",
-    "train_stratified_sample", "train_packed_sequences",
-    "train_mixture_order",
-    "clean_strip_boilerplate", "clean_repetition_stats",
-    "clean_contaminated",
-    "kg_sparql_having", "kg_sparql_bind_values",
-    # r3 continuation: snapshot-table commit protocol, web-corpus URL
-    # normalization, RDFS materialization, citegraph analytics
-    "kg_snapshot_incremental", "url_canonical", "kg_rdfs_entailed",
-    "kg_degree_distribution", "kg_ranking_ap",
-    # r4 additions: pruned IVF probing, real image-header decode,
-    # legacy .doc reader, sliding-window chunking, ranked-set baseline
-    "sim_ivf_topk_pruned", "mm_image_meta_real", "mm_audio_meta",
-    "word_docs_legacy", "train_doc_chunks", "train_corpus_pipeline",
-    "kg_ranking_baseline",
-    # r4 continuation: per-named-graph SPARQL, expression builtins,
-    # skolem hash minting, exact-substring span dedup
-    "kg_sparql_graph_var", "kg_sparql_builtins", "kg_sparql_hashes",
-    "dedup_repeated_spans", "dedup_span_removed", "kg_dup_triangles",
-    "text_lm_score", "dedup_incremental", "text_gopher_rules",
-    "kg_dup_clustering", "dedup_embedding_clusters",
-    "text_length_quantiles", "kg_sparql_agg_expr",
-    # r4 continuation: cluster-bounded semantic dedup (SemDeDup),
-    # skew-aware per-domain quota, CCNet perplexity buckets,
-    # Adamic-Adar link prediction
-    "dedup_semantic", "train_domain_cap", "train_dsir_weights",
-    "kg_jaccard_links", "kg_assortativity",
-    "dedup_edit_verified", "dedup_minhash_estimate", "text_c4_rules",
-    "dedup_url_recrawl", "sim_centroid_dist",
-    "search_bm25", "kg_kcore", "text_entropy", "text_tfidf_terms",
-    "events_funnel", "events_retention", "events_anomalies",
-    "text_readability", "kg_host_graph", "text_script_mix",
-    "train_bpe_merges", "kg_ranking_ndcg", "train_source_temperature",
-    "text_ccnet_buckets", "kg_link_prediction", "sim_sq8_topk",
-    # r4 continuation session 6: knowledge fusion, crawl-graph
-    # programs, temporal coalescing, ER blocking, KG training prep
-    "kg_fact_fusion", "kg_source_accuracy", "kg_redirect_resolution",
-    "crawl_robots_rules", "kg_anchor_text", "kg_valid_intervals",
-    "kg_bfs_distances", "dedup_sorted_neighborhood",
-    "train_kg_negatives", "text_pmi_bigrams",
-    "crawl_sitemap", "crawl_frontier", "kg_mention_contexts",
-    "kg_reified_statements", "kg_pred_cooccurrence",
-    "train_split_assignment", "train_token_budget",
-    "dedup_cluster_keep",
-    "kg_html_tables", "kg_infobox_triples", "kg_entity_disambiguation",
-    "stats_cms_tokens", "stats_hll_registers", "dedup_bloom_probe",
-    "crawl_sitemap_diff", "kg_neighbor_agg",
-    "kg_label_prop", "kg_jsonld_triples", "kg_hearst_pairs",
-    "kg_distant_supervision", "kg_nil_clustering",
-    "kg_taxonomy_reduction",
-    "kg_coref_chains", "kg_quote_attribution", "kg_alias_priors",
-    "kg_ppr", "train_kg_walks", "kg_table_column_types",
-    "kg_schema_matching", "kg_fd_discovery",
-    "kg_unit_normalize", "kg_geo_coords",
-    "dedup_er_eval", "text_sentences",
-    # r4 continuation session 7: web-graph sketching, OWL-RL rules,
-    # RDF lists, paragraph dedup, bitext mining, structured data,
-    # salience/co-mention features, profiling, contrastive pairs
-    "kg_hyperball", "kg_owl_entailed", "kg_rdf_lists",
-    "dedup_paragraph", "text_bitext_pairs", "kg_entity_salience",
-    "kg_microdata_triples", "kg_hreflang_links",
-    "train_contrastive_pairs", "stats_profile_documents",
-    "kg_entity_cooccurrence", "kg_sameas_incremental",
-    "kg_publication_dates",
-    # r4 continuation session 8: shape validation, N-Quads ingest,
-    # entity cards, weighted sampling, spam signals, winnowing,
-    # SCC/bow-tie, Z-order layout
-    "kg_shacl_violations", "kg_disjoint_violations",
-    "kg_nquads_triples", "kg_entity_cards", "train_weighted_sample",
-    "kg_spam_features", "text_winnowing", "kg_scc_labels",
-    "kg_bowtie_classes", "store_zorder_layout",
-    # r4 continuation session 9: recrawl scheduling, URL template
-    # mining, classifier calibration, tokenizer fertility, AMIE-lite
-    # rule mining + KG repair
-    "crawl_recrawl_schedule", "crawl_url_templates",
-    "stats_calibration_bins", "text_tokenizer_fertility",
-    "kg_mined_rules", "kg_rule_violations",
-    # r4 continuation session 10: mirror hosts, politeness slots,
-    # ReVerb-lite open IE, annotator agreement, corpus concentration
-    "crawl_mirror_hosts", "crawl_politeness_slots",
-    "kg_reverb_triples", "stats_cohens_kappa", "stats_gini_domains",
-    "clean_mojibake", "crawl_stitched_pages", "crawl_soft404",
-    "kg_property_coverage", "stats_domain_quality_eb",
-    "text_rake_keyphrases", "events_transition_matrix",
-    "crawl_budget_allocation", "stats_psi_drift",
-    "kg_pred_functionality",
-    "kg_schema_graph", "kg_transe_eval", "train_length_buckets",
-    "clean_compression_ratio", "kg_inverse_rules",
-    "search_rocchio", "kg_type_inference", "events_bot_signals",
-    "crawl_rel_canonical", "clean_lang_outliers",
-    # r4 session 8: PQ/MaxSim retrieval, FS linkage, stats gates,
-    # power-law fits, graph structure (WL/modularity/betweenness)
-    "sim_pq_topk", "sim_maxsim_topk", "kg_fs_linkage",
-    "stats_cusum", "stats_ks_lengths", "stats_mann_whitney",
-    "stats_acf_daily", "stats_theil_sen", "stats_chi2_lang_source",
-    "text_zipf_fit", "text_heaps_law", "text_textrank",
-    "kg_modularity", "kg_wl_colors", "kg_betweenness",
-    "kg_ktruss", "text_js_divergence", "text_yules_k",
-    "stats_benford", "stats_bootstrap_mean",
-    # r4 session 11: survival analysis, split-contamination audit,
-    # contiguous sequence mining
-    "train_leakage_check", "stats_kaplan_meier",
-    "events_sequence_mining", "store_compaction_plan",
-    "text_llr_collocations", "kg_harmonic_centrality",
-    # r4 session 12: citation-similarity pair
-    "kg_cocitation", "kg_biblio_coupling", "dedup_meta_blocking",
-    "stats_hist_quantiles", "mm_image_dhash", "mm_image_dhash_pairs",
-    "kg_spam_mass", "crawl_param_significance", "kg_simrank",
-    "dedup_containment", "crawl_blocklist_filter",
-    # r4 sessions 13-15: Turtle ingest, KMV sketch, social meta,
-    # main-content extraction, bitext mining/alignment, robots/feeds/
-    # CDX crawl surface, MIME sniffing, clustering coefficient,
-    # trap scoring, n-gram novelty, sliding distinct actives
-    "kg_turtle_triples", "stats_kmv_jaccard", "kg_social_meta_tags",
-    "clean_main_content", "clean_content_blocks",
-    "sim_margin_bitext", "bitext_galechurch",
-    "crawl_robots_meta", "crawl_follow_edges", "crawl_feed_entries",
-    "crawl_parse_robots", "crawl_robots_host_meta", "crawl_cdx_index",
-    "mm_mime_sniff",
-    "kg_clustering_coeff", "crawl_trap_detection",
-    "text_ngram_novelty", "events_sliding_distinct",
-    # r4 session 16: positional phrase search, SymSpell fuzzy
-    # lookup, per-series h-index, directed-edge reciprocity
-    "search_phrase", "search_fuzzy", "kg_h_index", "kg_reciprocity",
-    "kg_bnode_canonical", "store_zonemap_prune",
-    "events_decayed_counts", "stats_bh_fdr",
-    "clean_template_clusters", "text_date_normalize", "kg_path_rules",
-    "crawl_warc_revisit", "kg_heading_outline",
-    "search_more_like_this", "train_neyman_allocation",
-    "kg_breadcrumbs", "kg_katz", "text_code_detection",
-    "kg_graph_diff", "kg_void_stats", "kg_prov_triples",
-    "search_rrf_fusion", "kg_geo_join", "stats_mad_outliers",
-    "kg_inclusion_deps", "kg_interval_conflicts", "kg_conductance",
-    "stats_ams_f2", "stats_spearman", "stats_kendall",
-    "mm_exif_meta", "mm_alt_text_pairs",
-    "events_attribution", "events_paths", "text_kwic",
-    "text_s_stemmer", "text_burstiness", "store_bloom_skipping",
-    "kg_truthfinder", "store_hilbert_layout",
-    "events_markov_attribution", "store_expire_snapshots",
-    "events_identity_stitch", "mm_video_shots", "kg_snowball",
-    "search_collapse", "stats_ab_ztest", "dedup_cdc_chunks",
-    "kg_boruvka_msf", "train_curriculum", "store_bucket_prune",
-    "kg_graph_coloring", "text_texttiling",
-    "events_cohort_revenue", "store_partition_evolution",
-    "text_stopword_induction", "kg_asof_diff",
-    "events_sprt", "train_pareto",
-    "kg_rdfstar", "store_mor_planning",
-    "stats_tost", "stats_srm",
-    # r5: pep/ecma tech-repo instances, MP4/WebM header decode
-    "pep_docs", "ecma_standards", "mm_video_meta",
-    "text_hashed_classifier", "crawl_opic", "text_kneser_ney",
-    "text_kn_score", "text_good_turing", "kg_salsa", "text_sgt",
-    "clean_card_pii", "crawl_strand_pairs", "stats_wilson_domains",
-]
-
 
 def _cpu_times() -> tuple[int, int]:
     """(total_jiffies, steal_jiffies) from the aggregate /proc/stat
@@ -425,11 +249,11 @@ def main() -> int:
     spark = get_spark(app="bench", master="local[%d]" % cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
-    # warm the Arrow/pandas python-worker pool (cluster warm-pool
-    # analogue): the first mapInPandas otherwise pays one interpreter
-    # fork + pandas import per core inside the timed parse stage
+    # warm the Arrow python-worker pool (cluster warm-pool analogue):
+    # the first map_rows stage otherwise pays one interpreter fork +
+    # pyarrow import per core inside the timed parse stage
     (spark.range(cpus * 2).repartition(cpus)
-     .mapInPandas(lambda it: it, "id long").count())
+     .mapInArrow(lambda it: it, "id long").count())
 
     qs = entry.queries()
     timings: dict[str, float] = {}
@@ -448,9 +272,7 @@ def main() -> int:
     # reader can tell noise from a real plan change.
     query_reps = int(os.environ.get("BENCH_QUERY_REPS", "3"))
     spreads: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        if name not in qs:
-            continue
+    for name in qs:
         samples = []
         for _ in range(query_reps):
             t0 = time.time()

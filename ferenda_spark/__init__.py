@@ -5,10 +5,11 @@ reference framework (zigit/ferenda).
 The reference transforms unstructured document collections into Linked
 Data (RDF triples) plus derived analytic tables (facets, TOC, feeds,
 fulltext search).  This package re-expresses those stages as
-DataFrame/SQL programs with vectorized Arrow/pandas UDF stages:
+DataFrame/SQL programs with per-row Python stages run through one
+Arrow row mapper (``rowmap.map_rows``):
 
     pages (url, warc_ts, html, text, lang)
-      -> extract   (HTML -> text/title/metadata/sections, mapInPandas)
+      -> extract   (HTML -> text/title/metadata/sections, map_rows)
       -> mentions  (citation recognition, JVM-side regex)
       -> triples   (subj, pred, obj, obj_datatype, obj_lang, context)
       -> linking   (entity linking: broadcast exact + MinHash-LSH fuzzy)

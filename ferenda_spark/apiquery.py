@@ -485,41 +485,30 @@ def load_base_docs(spark, root: str,
     wsgiapp); corpus-scale search runs through operators/search.py,
     never through this loader."""
     import glob as g
-    import os as o
-    import pandas as pd
+    from .rowmap import map_rows
     from .turtle import parse_turtle
 
     files = []
     for ttl in sorted(g.glob(root + "/distilled/**/*.ttl",
                              recursive=True)):
         xhtml = ttl.replace("/distilled/", "/parsed/")[:-4] + ".xhtml"
-        files.append((ttl, open(ttl, encoding="utf-8").read(),
+        files.append((open(ttl, encoding="utf-8").read(),
                       open(xhtml, encoding="utf-8").read()))
-    pdf_in = spark.createDataFrame(files,
-                                   "path string, ttl string, xml string")
+    pdf_in = spark.createDataFrame(files, "ttl string, xml string")
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for ttl_text, xml_text in zip(pdf["ttl"], pdf["xml"]):
-                for s, p, obj in parse_turtle(ttl_text):
-                    if obj[0] == "uri":
-                        rows.append(("triple", s, p, obj[1], "uri"))
-                    else:
-                        rows.append(("triple", s, p, obj[1], "lit"))
-                top, subs = _xhtml_texts(xml_text)
-                doc_uri = min(s for s, _, _ in parse_turtle(ttl_text)
-                              if "#" not in s)
-                rows.append(("text", doc_uri, doc_uri, top, ""))
-                for sub_uri, sub_text in subs:
-                    rows.append(("text", doc_uri, sub_uri, sub_text,
-                                 ""))
-            yield pd.DataFrame(rows, columns=["rowkind", "a", "b", "c",
-                                              "d"])
+    def row(ttl_text, xml_text):
+        triples = parse_turtle(ttl_text)
+        for s, p, obj in triples:
+            yield ("triple", s, p, obj[1],
+                   "uri" if obj[0] == "uri" else "lit")
+        top, subs = _xhtml_texts(xml_text)
+        doc_uri = min(s for s, _, _ in triples if "#" not in s)
+        yield ("text", doc_uri, doc_uri, top, "")
+        for sub_uri, sub_text in subs:
+            yield ("text", doc_uri, sub_uri, sub_text, "")
 
-    rows = (pdf_in.mapInPandas(
-        batches, "rowkind string, a string, b string, c string, "
-                 "d string").collect())
+    rows = map_rows(pdf_in, row, "rowkind string, a string, b string, "
+                                 "c string, d string").collect()
     triples = [(r.a, r.b, r.c, r.d) for r in rows
                if r.rowkind == "triple"]
     texts: dict[str, str] = {}
@@ -542,35 +531,27 @@ def load_base_docs(spark, root: str,
 
 def load_testrepo_docs(spark, root: str) -> dict[str, list[dict]]:
     """Distill the testrepos RDFa fixtures through a Spark stage
-    (mapInPandas over the XHTML files) and build the per-repo index
+    (``map_rows`` over the XHTML files) and build the per-repo index
     docs.  The Spark stage carries the per-document extraction — the
     part that scales with corpus size; envelope assembly (the
     ``collect()``) stays driver-side like the reference's WSGI layer
     and is bounded by the fixture-repo document count (page-sized
     API responses; corpus-scale search is operators/search.py)."""
     import glob as g
-    import pandas as pd
+    from .rowmap import map_rows
 
     files = []
     for repo in sorted(REPO_FACETS):
         for f in sorted(g.glob("%s/%s/parsed/*.xhtml" % (root, repo))):
-            files.append((repo, f, open(f, encoding="utf-8").read()))
-    pdf_in = spark.createDataFrame(files,
-                                   "repo string, path string, xml string")
+            files.append((repo, open(f, encoding="utf-8").read()))
+    pdf_in = spark.createDataFrame(files, "repo string, xml string")
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for repo, xml_text in zip(pdf["repo"], pdf["xml"]):
-                for s, p, o, k in rdfa_triples(xml_text):
-                    rows.append((repo, s, p, o, k))
-            yield pd.DataFrame(rows,
-                               columns=["repo", "subj", "pred", "obj",
-                                        "kind"])
+    def row(repo, xml_text):
+        return [(repo, *t) for t in rdfa_triples(xml_text)]
 
-    triples = (pdf_in.mapInPandas(
-        batches, "repo string, subj string, pred string, obj string, "
-                 "kind string").collect())
+    triples = map_rows(pdf_in, row, "repo string, subj string, "
+                                    "pred string, obj string, "
+                                    "kind string").collect()
     by_repo: dict[str, list] = {}
     for r in triples:
         by_repo.setdefault(r.repo, []).append((r.subj, r.pred, r.obj,

@@ -35,11 +35,8 @@ from __future__ import annotations
 
 import datetime
 import textwrap
-from typing import Iterator
-
-import pandas as pd
-
 from .htmlelements import extract_document
+from .rowmap import map_rows
 from .textutil import normalize_space
 
 BASE = "https://example.org/"
@@ -188,22 +185,16 @@ def page_row(doc_id: int, text: str, lang: str, source: str) -> dict:
     }
 
 
-def _generate_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        rows = [page_row(int(d), t, l, s)
-                for d, t, l, s in zip(pdf["doc_id"], pdf["text"],
-                                      pdf["lang"], pdf["source"])]
-        yield pd.DataFrame({
-            c: [r[c] for r in rows]
-            for c in ("url", "warc_ts", "html", "text", "lang")})
+def _page_rows(doc_id, text, lang, source):
+    r = page_row(doc_id, text, lang, source)
+    yield (r["url"], r["warc_ts"], r["html"], r["text"], r["lang"])
 
 
 def pages_from_documents(documents_df):
     """documents(doc_id, text, lang, source, n_chars) -> pages DataFrame
-    (vectorized generation via mapInPandas; deterministic per doc_id)."""
-    return (documents_df
-            .select("doc_id", "text", "lang", "source")
-            .mapInPandas(_generate_batches, schema=PAGES_SCHEMA))
+    (one ``rowmap.map_rows`` pass; deterministic per doc_id)."""
+    return map_rows(documents_df.select("doc_id", "text", "lang", "source"),
+                    _page_rows, PAGES_SCHEMA)
 
 
 def load_pages(spark, sf_dir: str):

@@ -14,8 +14,9 @@ reference's FSMParser (ferenda/fsmparser.py:13-239, SURVEY.md P9):
   return to), a constructor builds a child (descending into a new state
   frame when it is marked with ``.newstate``).
 
-This runs *inside* an Arrow ``mapInPandas`` batch on the Spark side —
-sequential per document, vectorized across documents (SURVEY.md §2.10).
+This runs *inside* the Arrow row mapper (``rowmap.map_rows``) on the
+Spark side — sequential per document, one Arrow batch of documents per
+Python call (SURVEY.md §2.10).
 It is deliberately Spark-free so FSM golden tests run in plain pytest
 (mirroring the reference's test/files/fsmparser fixtures).
 """

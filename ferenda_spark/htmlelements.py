@@ -17,10 +17,10 @@ behavior of the reference's soup pipeline (SURVEY.md P1-P4):
 * metadata (documentrepository.py:1202-1242): lang from ``html/@xml:lang``
   else ``html/@lang`` else default; title from the first ``<title>``.
 
-These run inside Arrow ``mapInPandas`` batches on the Spark side; this
-module itself is deliberately Spark-free so the same code is golden
-tested in plain pytest (the byte-identity invariant of BASELINE.json's
-``input_hint``).
+These run inside the Arrow row mapper (``rowmap.map_rows``) on the
+Spark side; this module itself is deliberately Spark-free so the same
+code is golden tested in plain pytest (the byte-identity invariant of
+BASELINE.json's ``input_hint``).
 """
 
 from __future__ import annotations
@@ -176,6 +176,12 @@ def as_plaintext(node) -> str:
         else:
             parts.append(as_plaintext(child))
     return " ".join(p for p in parts if p)
+
+
+def node_text(node: Element) -> str:
+    """All text under ``node``, concatenated raw, then whitespace-
+    normalized once (the table-cell / anchor / microdata value)."""
+    return normalize_space("".join(_raw_text(node)))
 
 
 def _first_title_text(root: Element):

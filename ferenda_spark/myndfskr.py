@@ -387,25 +387,17 @@ FS_SCHEMA = ("basefile string, subj string, pred string, obj string, "
 def fs_metadata(docs, text_col: str = "text",
                 basefile_col: str = "basefile"):
     """Spark stage: (basefile, text) -> metadata triples, one
-    Arrow-batched mapInPandas pass (same stage shape as the parse
-    stage; the scanners and tables ship inside the UDF).  A document
-    that fails extraction yields one quarantine row
-    (objtype='error') instead of failing the batch (I4)."""
-    import pandas as pd
+    ``rowmap.map_rows`` pass (same stage shape as the parse stage; the
+    scanners and tables ship inside the UDF).  A document whose
+    extraction fails yields one quarantine row (objtype='error')
+    after the triples read so far, instead of failing the batch (I4)."""
+    from .rowmap import map_rows
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for basefile, text in zip(pdf[basefile_col], pdf[text_col]):
-                try:
-                    for s, p, o, k in parse_fs_text(text or "",
-                                                    basefile):
-                        rows.append((basefile, s, p, o, k))
-                except Exception as e:
-                    rows.append((basefile, "", "", str(e), "error"))
-            yield pd.DataFrame(rows, columns=["basefile", "subj",
-                                              "pred", "obj",
-                                              "objtype"])
+    def row(basefile, text):
+        try:
+            for s, p, o, k in parse_fs_text(text or "", basefile):
+                yield (basefile, s, p, o, k)
+        except Exception as e:
+            yield (basefile, "", "", str(e), "error")
 
-    return (docs.select(basefile_col, text_col)
-            .mapInPandas(batches, schema=FS_SCHEMA))
+    return map_rows(docs.select(basefile_col, text_col), row, FS_SCHEMA)

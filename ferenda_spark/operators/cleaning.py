@@ -23,6 +23,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..htmlelements import decode_html, parse_html
+from ..rowmap import map_rows
+from ..textutil import normalize_space
+
 from .dedup import tokens
 
 
@@ -469,38 +473,28 @@ def compression_ratio(documents: DataFrame, text_col: str = "text",
     for empty documents).
 
     This is the repo's honest Python-kernel path: zlib is not
-    expressible as a Catalyst expression, so it runs as an
-    Arrow-batched ``mapInPandas`` stage (no per-row Python overhead;
-    the batch loop is C-backed zlib).  Deterministic for a fixed
-    zlib build -- the correctness gate records a rows-only check
-    (DuckDB has no DEFLATE), and the pytest suite pins exact parity
-    against local zlib.
+    expressible as a Catalyst expression, so it runs as a
+    ``map_rows`` stage (the per-row work is C-backed zlib).
+    Deterministic for a fixed zlib build -- the correctness gate
+    records a rows-only check (DuckDB has no DEFLATE), and the pytest
+    suite pins exact parity against local zlib.
 
-    Returns (id, n_bytes, n_compressed, ratio).
+    Returns (id, n_bytes, n_compressed, ratio); the id passes through
+    unchanged and a NULL text gives NULL sizes and ratio.
     """
-    import pyspark.sql.types as T
-    out_schema = T.StructType([
-        T.StructField("id", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("n_compressed", T.LongType()),
-    ])
+    import zlib
     lvl = int(level)
 
-    def batches(it):
-        import pandas as pd
-        import zlib
-        for pdf in it:
-            texts = pdf[text_col].astype(str)
-            raw = [t.encode("utf-8") for t in texts]
-            yield pd.DataFrame({
-                "id": pdf[id_col].astype(str),
-                "n_bytes": [len(b) for b in raw],
-                "n_compressed": [len(zlib.compress(b, lvl))
-                                 for b in raw],
-            })
+    def row(doc_id, text):
+        if text is None:
+            return [(doc_id, None, None)]
+        raw = text.encode("utf-8")
+        return [(doc_id, len(raw), len(zlib.compress(raw, lvl)))]
 
-    sized = (documents.select(F.col(id_col), F.col(text_col))
-             .mapInPandas(batches, out_schema))
+    sized = map_rows(
+        documents.select(id_col, text_col), row,
+        "id %s, n_bytes long, n_compressed long"
+        % documents.schema[id_col].dataType.simpleString())
     return sized.select(
         F.col("id").alias(id_col), "n_bytes", "n_compressed",
         F.when(F.col("n_bytes") > 0,
@@ -562,67 +556,48 @@ CONTENT_BLOCK_SCHEMA = ("url string, block_id int, tag string, "
                         "text string, n_words int, link_permille int")
 
 
-def _content_block_batches(it):
-    import pandas as pd
+def _has_block_child(n):
+    for c in n.children:
+        if not isinstance(c, str):
+            if c.tag in BLOCK_TAGS or _has_block_child(c):
+                return True
+    return False
 
-    from ..htmlelements import decode_html, parse_html
-    from ..textutil import normalize_space
 
-    def text_of(n, parts):
+def _content_block_row(url, raw):
+    rows = []
+
+    def emit(n):
+        parts, link_parts = [], []
+
+        def walk(c, in_link):
+            if isinstance(c, str):
+                parts.append(c)
+                if in_link:
+                    link_parts.append(c)
+                return
+            for g in c.children:
+                walk(g, in_link or c.tag == "a")
+
+        walk(n, False)
+        txt = normalize_space("".join(parts))
+        if not txt:
+            return          # whitespace-only block: no row
+        link_chars = len(normalize_space("".join(link_parts)))
+        rows.append((url, len(rows), n.tag, txt, len(txt.split()),
+                     1000 * link_chars // len(txt)))
+
+    def scan(n):
         if isinstance(n, str):
-            parts.append(n)
+            return
+        if n.tag in BLOCK_TAGS and not _has_block_child(n):
+            emit(n)
             return
         for c in n.children:
-            text_of(c, parts)
+            scan(c)
 
-    def has_block_child(n):
-        for c in n.children:
-            if not isinstance(c, str):
-                if c.tag in BLOCK_TAGS or has_block_child(c):
-                    return True
-        return False
-
-    for pdf in it:
-        rows = []
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            tree = parse_html(decode_html(bytes(raw)))
-            bid = [0]
-
-            def emit(n):
-                parts, link_parts = [], []
-
-                def walk(c, in_link):
-                    if isinstance(c, str):
-                        parts.append(c)
-                        if in_link:
-                            link_parts.append(c)
-                        return
-                    for g in c.children:
-                        walk(g, in_link or c.tag == "a")
-
-                walk(n, False)
-                txt = normalize_space("".join(parts))
-                if not txt:
-                    return          # whitespace-only block: no row
-                link_chars = len(normalize_space("".join(link_parts)))
-                permille = 1000 * link_chars // len(txt)
-                rows.append((url, bid[0], n.tag, txt,
-                             len(txt.split()), permille))
-                bid[0] += 1
-
-            def scan(n):
-                if isinstance(n, str):
-                    return
-                if n.tag in BLOCK_TAGS and not has_block_child(n):
-                    emit(n)
-                    return
-                for c in n.children:
-                    scan(c)
-
-            scan(tree)
-        yield pd.DataFrame(rows, columns=["url", "block_id", "tag",
-                                          "text", "n_words",
-                                          "link_permille"])
+    scan(parse_html(decode_html(raw)))
+    return rows
 
 
 def content_blocks(pages: DataFrame) -> DataFrame:
@@ -635,12 +610,11 @@ def content_blocks(pages: DataFrame) -> DataFrame:
     content) is attributed to no block, matching jusText's
     segmentation.
 
-    Scale shape: Arrow-batched ``mapInPandas`` over (url, html) --
-    one DOM pass per page, page bytes dropped at the stage boundary,
-    no shuffle."""
-    return (pages.select("url", "html")
-            .mapInPandas(_content_block_batches,
-                         schema=CONTENT_BLOCK_SCHEMA))
+    Scale shape: one ``map_rows`` pass over (url, html) -- one DOM
+    pass per page, page bytes dropped at the stage boundary, no
+    shuffle."""
+    return map_rows(pages.select("url", "html"), _content_block_row,
+                    CONTENT_BLOCK_SCHEMA)
 
 
 def classify_blocks(blocks: DataFrame, good_words: int = 20,

@@ -29,10 +29,12 @@ graph programs over the link/redirect tables:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import xml.etree.ElementTree as ET
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..htmlelements import decode_html, node_text, parse_html, prune
+from ..rowmap import map_rows
 
 
 # ------------------------------------------------------------ redirects
@@ -124,50 +126,26 @@ def robots_allowed(urls: DataFrame, rules: DataFrame,
 ANCHOR_SCHEMA = "src_url string, position int, href string, anchor string"
 
 
-def _node_text(node) -> str:
-    from ..textutil import normalize_space
-    parts: list[str] = []
+def _anchor_row(url, raw):
+    tree = parse_html(decode_html(raw))
+    pruned = prune(tree.find("body") or tree)
+    rows = []
+    seen: set[str] = set()
 
     def walk(n):
         if isinstance(n, str):
-            parts.append(n)
             return
+        if n.tag == "a" and "href" in n.attrs:
+            href = n.attrs["href"]
+            if href not in seen:
+                seen.add(href)
+                rows.append((url, len(rows), href, node_text(n)))
         for c in n.children:
             walk(c)
 
-    walk(node)
-    return normalize_space("".join(parts))
-
-
-def _anchor_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..htmlelements import decode_html, parse_html, prune
-    for pdf in it:
-        rows = []
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            tree = parse_html(decode_html(bytes(raw)))
-            body = tree.find("body") or tree
-            pruned = prune(body)
-            if pruned is None:
-                continue
-            seen: set[str] = set()
-            pos = 0
-
-            def walk(n):
-                nonlocal pos
-                if isinstance(n, str):
-                    return
-                if n.tag == "a" and "href" in n.attrs:
-                    href = n.attrs["href"]
-                    if href not in seen:
-                        seen.add(href)
-                        rows.append((url, pos, href, _node_text(n)))
-                        pos += 1
-                for c in n.children:
-                    walk(c)
-
-            walk(pruned)
-        yield pd.DataFrame(rows, columns=["src_url", "position",
-                                          "href", "anchor"])
+    if pruned is not None:
+        walk(pruned)
+    return rows
 
 
 def anchor_links(pages: DataFrame) -> DataFrame:
@@ -175,8 +153,7 @@ def anchor_links(pages: DataFrame) -> DataFrame:
     href in document order with its normalized anchor text.  Same
     pruning as the main extract stage, so href order and dedup agree
     with extract_document's ``links`` column exactly."""
-    return (pages.select("url", "html")
-            .mapInPandas(_anchor_batches, schema=ANCHOR_SCHEMA))
+    return map_rows(pages.select("url", "html"), _anchor_row, ANCHOR_SCHEMA)
 
 
 def anchor_text_profile(links: DataFrame,
@@ -204,32 +181,29 @@ def anchor_text_profile(links: DataFrame,
 SITEMAP_SCHEMA = ("loc string, lastmod string, priority_tenths int")
 
 
-def _sitemap_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import xml.etree.ElementTree as ET
-    for pdf in it:
-        rows = []
-        for raw in pdf["xml"]:
-            root = ET.fromstring(bytes(raw).decode("utf-8"))
-            for url_el in root:
-                if not url_el.tag.endswith("url"):
-                    continue
-                loc = lastmod = None
-                prio = None
-                for child in url_el:
-                    tag = child.tag.rsplit("}", 1)[-1]
-                    if tag == "loc":
-                        loc = (child.text or "").strip()
-                    elif tag == "lastmod":
-                        lastmod = (child.text or "").strip()
-                    elif tag == "priority":
-                        txt = (child.text or "").strip()
-                        # "0.d" -> d; integer so no float compare
-                        prio = int(txt.split(".", 1)[1][:1]) \
-                            if "." in txt else int(txt) * 10
-                if loc:
-                    rows.append((loc, lastmod, prio))
-        yield pd.DataFrame(rows, columns=["loc", "lastmod",
-                                          "priority_tenths"])
+def _sitemap_row(raw):
+    try:
+        root = ET.fromstring(raw.decode("utf-8"))
+    except (UnicodeDecodeError, ET.ParseError):
+        return          # malformed sitemap: no entries, job goes on
+    for url_el in root:
+        if not url_el.tag.endswith("url"):
+            continue
+        loc = lastmod = None
+        prio = None
+        for child in url_el:
+            tag = child.tag.rsplit("}", 1)[-1]
+            if tag == "loc":
+                loc = (child.text or "").strip()
+            elif tag == "lastmod":
+                lastmod = (child.text or "").strip()
+            elif tag == "priority":
+                txt = (child.text or "").strip()
+                # "0.d" -> d; integer so no float compare
+                prio = int(txt.split(".", 1)[1][:1]) \
+                    if "." in txt else int(txt) * 10
+        if loc:
+            yield (loc, lastmod, prio)
 
 
 def sitemap_entries(sitemaps: DataFrame,
@@ -239,9 +213,9 @@ def sitemap_entries(sitemaps: DataFrame,
     the crawl-seeding stage.  Real ElementTree parse, Arrow-batched;
     priority is kept as integer tenths so no float ever crosses the
     engine boundary.  One sitemap file = one row in, its URL entries
-    out (UDTF shape, like the WARC reader)."""
-    return (sitemaps.select(F.col(xml_col).alias("xml"))
-            .mapInPandas(_sitemap_batches, schema=SITEMAP_SCHEMA))
+    out (UDTF shape, like the WARC reader); a file that is not
+    well-formed UTF-8 XML yields no rows rather than failing the job."""
+    return map_rows(sitemaps.select(xml_col), _sitemap_row, SITEMAP_SCHEMA)
 
 
 # ------------------------------------------------------------ frontier
@@ -789,34 +763,31 @@ def blocklist_filter(urls: DataFrame, blocklist: DataFrame,
 ROBOTS_META_SCHEMA = "url string, noindex boolean, nofollow boolean"
 
 
-def _robots_meta_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..htmlelements import decode_html, parse_html
-    for pdf in it:
-        rows = []
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            tree = parse_html(decode_html(bytes(raw)))
-            noindex = nofollow = False
+def _robots_directives(tree):
+    """(noindex, nofollow) from every ``<meta name="robots">``."""
+    noindex = nofollow = False
 
-            def scan(n):
-                nonlocal noindex, nofollow
-                if isinstance(n, str):
-                    return
-                if (n.tag == "meta"
-                        and (n.attrs.get("name") or "").lower()
-                        == "robots"):
-                    ds = {d.strip().lower() for d in
-                          (n.attrs.get("content") or "").split(",")}
-                    if "noindex" in ds or "none" in ds:
-                        noindex = True
-                    if "nofollow" in ds or "none" in ds:
-                        nofollow = True
-                for c in n.children:
-                    scan(c)
+    def scan(n):
+        nonlocal noindex, nofollow
+        if isinstance(n, str):
+            return
+        if n.tag == "meta" and (n.attrs.get("name") or "").lower() \
+                == "robots":
+            ds = {d.strip().lower() for d in
+                  (n.attrs.get("content") or "").split(",")}
+            if "noindex" in ds or "none" in ds:
+                noindex = True
+            if "nofollow" in ds or "none" in ds:
+                nofollow = True
+        for c in n.children:
+            scan(c)
 
-            scan(tree)
-            rows.append((url, noindex, nofollow))
-        yield pd.DataFrame(rows, columns=["url", "noindex",
-                                          "nofollow"])
+    scan(tree)
+    return noindex, nofollow
+
+
+def _robots_meta_row(url, raw):
+    yield (url, *_robots_directives(parse_html(decode_html(raw))))
 
 
 def robots_meta(pages: DataFrame) -> DataFrame:
@@ -829,62 +800,36 @@ def robots_meta(pages: DataFrame) -> DataFrame:
     the output is a total function of the input — the filter
     decision stays with the caller.
 
-    Arrow-batched ``mapInPandas``, one DOM pass, no shuffle."""
-    return (pages.select("url", "html")
-            .mapInPandas(_robots_meta_batches,
-                         schema=ROBOTS_META_SCHEMA))
+    One :func:`map_rows` DOM pass, no shuffle."""
+    return map_rows(pages.select("url", "html"), _robots_meta_row,
+                    ROBOTS_META_SCHEMA)
 
 
 FOLLOW_EDGE_SCHEMA = ("src_url string, position int, href string, "
                       "follow boolean")
 
 
-def _follow_edge_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..htmlelements import decode_html, parse_html
-    for pdf in it:
-        rows = []
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            tree = parse_html(decode_html(bytes(raw)))
-            meta_nofollow = False
+def _follow_edge_row(url, raw):
+    tree = parse_html(decode_html(raw))
+    meta_nofollow = _robots_directives(tree)[1]
+    rows = []
+    seen: set = set()
 
-            def meta_scan(n):
-                nonlocal meta_nofollow
-                if isinstance(n, str):
-                    return
-                if (n.tag == "meta"
-                        and (n.attrs.get("name") or "").lower()
-                        == "robots"):
-                    ds = {d.strip().lower() for d in
-                          (n.attrs.get("content") or "").split(",")}
-                    if "nofollow" in ds or "none" in ds:
-                        meta_nofollow = True
-                for c in n.children:
-                    meta_scan(c)
+    def scan(n):
+        if isinstance(n, str):
+            return
+        if n.tag == "a" and "href" in n.attrs:
+            href = n.attrs["href"]
+            if href not in seen:
+                seen.add(href)
+                rel = {t.lower() for t in (n.attrs.get("rel") or "").split()}
+                rows.append((url, len(rows), href,
+                             not (meta_nofollow or "nofollow" in rel)))
+        for c in n.children:
+            scan(c)
 
-            meta_scan(tree)
-            seen: set = set()
-            pos = 0
-
-            def scan(n):
-                nonlocal pos
-                if isinstance(n, str):
-                    return
-                if n.tag == "a" and "href" in n.attrs:
-                    href = n.attrs["href"]
-                    if href not in seen:
-                        seen.add(href)
-                        rel = {t.lower() for t in
-                               (n.attrs.get("rel") or "").split()}
-                        rows.append((url, pos, href,
-                                     not (meta_nofollow
-                                          or "nofollow" in rel)))
-                        pos += 1
-                for c in n.children:
-                    scan(c)
-
-            scan(tree)
-        yield pd.DataFrame(rows, columns=["src_url", "position",
-                                          "href", "follow"])
+    scan(tree)
+    return rows
 
 
 def follow_edges(pages: DataFrame) -> DataFrame:
@@ -901,10 +846,9 @@ def follow_edges(pages: DataFrame) -> DataFrame:
     discovers URLs wherever they sit (nav/footer included); use
     anchor_links when anchor TEXT quality matters instead.
 
-    Arrow-batched ``mapInPandas``, one DOM pass, no shuffle."""
-    return (pages.select("url", "html")
-            .mapInPandas(_follow_edge_batches,
-                         schema=FOLLOW_EDGE_SCHEMA))
+    One :func:`map_rows` DOM pass, no shuffle."""
+    return map_rows(pages.select("url", "html"), _follow_edge_row,
+                    FOLLOW_EDGE_SCHEMA)
 
 
 # ------------------------------------------------------- feeds
@@ -913,50 +857,41 @@ FEED_SCHEMA = ("feed_url string, idx int, title string, link string, "
                "entry_id string, published string")
 
 
-def _feed_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import xml.etree.ElementTree as ET
+def _local(tag: str) -> str:
+    return tag.rsplit("}", 1)[-1]
 
-    def local(tag: str) -> str:
-        return tag.rsplit("}", 1)[-1]
 
-    for pdf in it:
-        rows = []
-        for furl, raw in zip(pdf["feed_url"], pdf["xml"]):
-            root = ET.fromstring(bytes(raw).decode("utf-8"))
-            idx = 0
-            kind = local(root.tag)
-            if kind == "rss":
-                chan = next((c for c in root
-                             if local(c.tag) == "channel"), None)
-                entries = [] if chan is None else \
-                    [i for i in chan if local(i.tag) == "item"]
-            elif kind == "feed":
-                entries = [e for e in root
-                           if local(e.tag) == "entry"]
-            else:
-                entries = []
-            for e in entries:
-                title = link = gid = pub = upd = None
-                for c in e:
-                    t = local(c.tag)
-                    txt = (c.text or "").strip()
-                    if t == "title":
-                        title = txt
-                    elif t == "link":
-                        # RSS: element text; Atom: @href
-                        link = c.attrib.get("href") or txt or None
-                    elif t in ("guid", "id"):
-                        gid = txt
-                    elif t in ("pubDate", "published"):
-                        pub = txt
-                    elif t == "updated":
-                        upd = txt
-                rows.append((furl, idx, title, link, gid,
-                             pub if pub is not None else upd))
-                idx += 1
-        yield pd.DataFrame(rows, columns=["feed_url", "idx", "title",
-                                          "link", "entry_id",
-                                          "published"])
+def _feed_row(furl, raw):
+    try:
+        root = ET.fromstring(raw.decode("utf-8"))
+    except (UnicodeDecodeError, ET.ParseError):
+        return          # malformed feed: no entries, job goes on
+    kind = _local(root.tag)
+    if kind == "rss":
+        chan = next((c for c in root if _local(c.tag) == "channel"), None)
+        entries = [] if chan is None else \
+            [i for i in chan if _local(i.tag) == "item"]
+    elif kind == "feed":
+        entries = [e for e in root if _local(e.tag) == "entry"]
+    else:
+        entries = []
+    for idx, e in enumerate(entries):
+        title = link = gid = pub = upd = None
+        for c in e:
+            t = _local(c.tag)
+            txt = (c.text or "").strip()
+            if t == "title":
+                title = txt
+            elif t == "link":
+                # RSS: element text; Atom: @href
+                link = c.attrib.get("href") or txt or None
+            elif t in ("guid", "id"):
+                gid = txt
+            elif t in ("pubDate", "published"):
+                pub = txt
+            elif t == "updated":
+                upd = txt
+        yield (furl, idx, title, link, gid, pub if pub is not None else upd)
 
 
 def feed_entries(feeds: DataFrame) -> DataFrame:
@@ -966,14 +901,13 @@ def feed_entries(feeds: DataFrame) -> DataFrame:
     title, link (RSS element text or Atom ``@href``), guid/id and
     the published date (Atom falls back to ``updated`` when
     ``published`` is absent).  Namespaced and bare element names
-    both accepted; unknown root elements yield no rows rather than
-    failing the partition.
+    both accepted; unknown root elements and feeds that are not
+    well-formed UTF-8 XML yield no rows rather than failing the job.
 
-    Arrow-batched ``mapInPandas`` over the XML bytes, no shuffle;
-    feeds parse independently so a 100 TB feed corpus maps straight
+    One :func:`map_rows` pass over the XML bytes, no shuffle; feeds
+    parse independently so a 100 TB feed corpus maps straight
     through."""
-    return (feeds.select("feed_url", "xml")
-            .mapInPandas(_feed_batches, schema=FEED_SCHEMA))
+    return map_rows(feeds.select("feed_url", "xml"), _feed_row, FEED_SCHEMA)
 
 
 # ---------------------------------------------------- robots.txt
@@ -1047,18 +981,13 @@ def parse_robots(texts: DataFrame, agent: str = "*") -> DataFrame:
     combine (RFC 9309).  ``rule_no`` preserves file order.  Input:
     (host, robots_txt).  Arrow-batched, no shuffle — robots files
     parse independently per host."""
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for host, txt in zip(pdf["host"], pdf["robots_txt"]):
-                rules, _, _ = _parse_robots_text(txt or "", agent)
-                for i, (prefix, allow) in enumerate(rules):
-                    rows.append((host, prefix, allow, i))
-            yield pd.DataFrame(rows, columns=[
-                "host", "path_prefix", "allow", "rule_no"])
+    def rules(host, txt):
+        for i, (prefix, allow) in enumerate(
+                _parse_robots_text(txt or "", agent)[0]):
+            yield (host, prefix, allow, i)
 
-    return (texts.select("host", "robots_txt")
-            .mapInPandas(batches, schema=ROBOTS_RULES_SCHEMA))
+    return map_rows(texts.select("host", "robots_txt"), rules,
+                    ROBOTS_RULES_SCHEMA)
 
 
 def robots_host_meta(texts: DataFrame, agent: str = "*") -> DataFrame:
@@ -1066,21 +995,14 @@ def robots_host_meta(texts: DataFrame, agent: str = "*") -> DataFrame:
     declared sitemaps (file order) from robots.txt — the politeness
     and discovery side channels.  Hosts with neither emit one row of
     NULLs so the host stays visible to the scheduler join."""
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for host, txt in zip(pdf["host"], pdf["robots_txt"]):
-                _, delay, maps = _parse_robots_text(txt or "", agent)
-                if maps:
-                    for i, m in enumerate(maps):
-                        rows.append((host, delay, m, i))
-                else:
-                    rows.append((host, delay, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "host", "crawl_delay_ms", "sitemap", "sitemap_no"])
+    def host_meta(host, txt):
+        _, delay, maps = _parse_robots_text(txt or "", agent)
+        if not maps:
+            return [(host, delay, None, None)]
+        return [(host, delay, m, i) for i, m in enumerate(maps)]
 
-    return (texts.select("host", "robots_txt")
-            .mapInPandas(batches, schema=ROBOTS_META2_SCHEMA))
+    return map_rows(texts.select("host", "robots_txt"), host_meta,
+                    ROBOTS_META2_SCHEMA)
 
 
 # ---------------------------------------------------- SURT / CDX
@@ -1324,7 +1246,8 @@ def strand_url_pairs(pages: DataFrame, url_col: str = "url",
     host = F.parse_url(F.col(url_col), F.lit("HOST"))
     path = F.parse_url(F.col(url_col), F.lit("PATH"))
     lang = F.regexp_extract(path, r"(?:^|/)(%s)(?=/|$)" % alt, 1)
-    tmpl = F.regexp_replace(path, r"(^|/)(%s)(?=/|$)" % alt,
+    # replace only the segment lang was taken from (the first one)
+    tmpl = F.regexp_replace(path, r"^((?:.*?/)?)(%s)(?=/|$)" % alt,
                             r"$1{lang}")
     tagged = (pages
               .select(F.col(url_col).alias("url"),

@@ -1,4 +1,4 @@
-"""Extract stage: pages -> parsed documents (vectorized mapInPandas).
+"""Extract stage: pages -> parsed documents (one Arrow row mapper).
 
 The Spark restatement of the reference's parse pipeline
 (documentrepository.py:1118-1141 / rfc.py:456-474): one Arrow batch in,
@@ -16,12 +16,11 @@ output schema so the downstream DAG never carries page bytes.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..htmlelements import decode_html, node_text, parse_html
 from ..parsepage import parse_page
+from ..rowmap import map_rows
 
 PARSED_SCHEMA = (
     "url string, warc_ts timestamp, lang string, kind string, "
@@ -34,40 +33,20 @@ _EMPTY = {"title": None, "lang": None, "text": None, "preamble": None,
           "kind": None, "sections": [], "links": []}
 
 
-def _parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ("lang", "kind", "title", "text", "preamble", "sections",
-            "links")
-    for pdf in it:
-        # columnar accumulation: one list per column + dict-of-lists
-        # frame construction skips the per-row dict and row-wise
-        # DataFrame assembly overhead of the naive loop
-        out = {c: [] for c in cols}
-        errs = []
-        langs = pdf["lang"].tolist()
-        for i, html in enumerate(pdf["html"].tolist()):
-            try:
-                d = parse_page(bytes(html), default_lang=langs[i] or "en")
-                err = None
-            except Exception as e:  # quarantine, never abort the corpus
-                d, err = _EMPTY, "%s: %s" % (type(e).__name__, e)
-            for c in cols:
-                out[c].append(d[c])
-            errs.append(err)
-        out["lang"] = [l or langs[i] for i, l in enumerate(out["lang"])]
-        yield pd.DataFrame({
-            "url": pdf["url"].values, "warc_ts": pdf["warc_ts"].values,
-            "lang": out["lang"], "kind": out["kind"],
-            "title": out["title"], "text": out["text"],
-            "preamble": out["preamble"], "sections": out["sections"],
-            "links": out["links"], "error": errs,
-        })
+def _parse_row(url, warc_ts, html, lang):
+    try:
+        d = parse_page(html, default_lang=lang or "en")
+        err = None
+    except Exception as e:  # quarantine, never abort the corpus
+        d, err = _EMPTY, "%s: %s" % (type(e).__name__, e)
+    yield (url, warc_ts, d["lang"] or lang, d["kind"], d["title"],
+           d["text"], d["preamble"], d["sections"], d["links"], err)
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> parsed docs."""
-    return (pages
-            .select("url", "warc_ts", "html", "lang")
-            .mapInPandas(_parse_batches, schema=PARSED_SCHEMA))
+    return map_rows(pages.select("url", "warc_ts", "html", "lang"),
+                    _parse_row, PARSED_SCHEMA)
 
 
 LEGAL_MENTIONS_SCHEMA = ("url string, kind string, start int, "
@@ -77,23 +56,16 @@ LEGAL_MENTIONS_SCHEMA = ("url string, kind string, start int, "
 LEGAL_SCANNERS = ("sfs", "caselaw", "avg", "forarbeten", "eglag", "ecj")
 
 
-def _legal_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _legal_row(url, text):
     from .. import legalref as L
-    scanners = {"sfs": L.scan_legal_refs, "caselaw": L.scan_caselaw,
-                "avg": L.scan_avg, "forarbeten": L.scan_forarbeten,
-                "eglag": L.scan_eglag, "ecj": L.scan_ecj}
-    for pdf in it:
-        rows = []
-        for url, text in zip(pdf["url"], pdf["text"]):
-            for kind, fn in scanners.items():
-                pos = 0
-                for seg in fn(text or ""):
-                    if seg[0] == "link":
-                        rows.append((url, kind, pos, pos + len(seg[1]),
-                                     seg[1], seg[2]))
-                    pos += len(seg[1])
-        yield pd.DataFrame(rows, columns=["url", "kind", "start", "end",
-                                          "anchor", "target_uri"])
+    for kind, fn in (("sfs", L.scan_legal_refs), ("caselaw", L.scan_caselaw),
+                     ("avg", L.scan_avg), ("forarbeten", L.scan_forarbeten),
+                     ("eglag", L.scan_eglag), ("ecj", L.scan_ecj)):
+        pos = 0
+        for seg in fn(text or ""):
+            if seg[0] == "link":
+                yield (url, kind, pos, pos + len(seg[1]), seg[1], seg[2])
+            pos += len(seg[1])
 
 
 def legal_mentions(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -102,8 +74,8 @@ def legal_mentions(docs: DataFrame, text_col: str = "text") -> DataFrame:
     families (statutes, case law, agency decisions, preparatory
     works, EU law) via the Arrow-batched scanners; dictionaries ship
     inside the UDF (broadcast analogue).  No shuffle."""
-    return (docs.select("url", F.col(text_col).alias("text"))
-            .mapInPandas(_legal_batches, schema=LEGAL_MENTIONS_SCHEMA))
+    return map_rows(docs.select("url", text_col), _legal_row,
+                    LEGAL_MENTIONS_SCHEMA)
 
 
 def mention_contexts(mentions: DataFrame, docs: DataFrame,
@@ -133,53 +105,29 @@ TABLE_CELLS_SCHEMA = ("url string, table_idx int, row_idx int, "
                       "col_idx int, cell string")
 
 
-def _table_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..htmlelements import decode_html, parse_html
-    from ..textutil import normalize_space
+def _table_row(url, raw):
+    tables = []
 
-    def _cell_text(node):
-        parts = []
+    def find_tables(n):
+        if isinstance(n, str):
+            return
+        if n.tag == "table":
+            tables.append(n)
+            return          # nested tables stay inside parent
+        for c in n.children:
+            find_tables(c)
 
-        def walk(n):
-            if isinstance(n, str):
-                parts.append(n)
-                return
-            for c in n.children:
-                walk(c)
-
-        walk(node)
-        return normalize_space("".join(parts))
-
-    for pdf in it:
-        rows = []
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            tree = parse_html(decode_html(bytes(raw)))
-            tables = []
-
-            def find_tables(n):
-                if isinstance(n, str):
-                    return
-                if n.tag == "table":
-                    tables.append(n)
-                    return          # nested tables stay inside parent
-                for c in n.children:
-                    find_tables(c)
-
-            find_tables(tree)
-            for t_idx, t in enumerate(tables):
-                r_idx = 0
-                for tr in (c for c in t.children
-                           if not isinstance(c, str) and c.tag == "tr"):
-                    c_idx = 0
-                    for td in (c for c in tr.children
-                               if not isinstance(c, str)
-                               and c.tag in ("td", "th")):
-                        rows.append((url, t_idx, r_idx, c_idx,
-                                     _cell_text(td)))
-                        c_idx += 1
-                    r_idx += 1
-        yield pd.DataFrame(rows, columns=["url", "table_idx", "row_idx",
-                                          "col_idx", "cell"])
+    find_tables(parse_html(decode_html(raw)))
+    for t_idx, t in enumerate(tables):
+        r_idx = 0
+        for tr in (c for c in t.children
+                   if not isinstance(c, str) and c.tag == "tr"):
+            c_idx = 0
+            for td in (c for c in tr.children
+                       if not isinstance(c, str) and c.tag in ("td", "th")):
+                yield (url, t_idx, r_idx, c_idx, node_text(td))
+                c_idx += 1
+            r_idx += 1
 
 
 def html_table_cells(pages: DataFrame) -> DataFrame:
@@ -188,8 +136,8 @@ def html_table_cells(pages: DataFrame) -> DataFrame:
     web KGs mine most of their literal facts from exactly these
     key/value tables.  Real DOM parse (same parser as the extract
     stage, <td>/<th> both counted), Arrow-batched, no shuffle."""
-    return (pages.select("url", "html")
-            .mapInPandas(_table_batches, schema=TABLE_CELLS_SCHEMA))
+    return map_rows(pages.select("url", "html"), _table_row,
+                    TABLE_CELLS_SCHEMA)
 
 
 # ---------------------------------------------------- structured data
@@ -456,107 +404,85 @@ MICRODATA_SCHEMA = ("url string, item_id string, pred string, "
                     "obj string")
 
 
-def _microdata_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..htmlelements import decode_html, parse_html
-    from ..textutil import normalize_space
+_RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
-    def _text(node):
-        parts = []
 
-        def walk(n):
+def _microdata_value(el):
+    # HTML5 microdata value rules (§5.2.4), the subset WDC-style
+    # extractors implement
+    if el.tag == "meta":
+        return el.attrs.get("content", "")
+    if el.tag in ("a", "link", "area"):
+        return el.attrs.get("href", "")
+    if el.tag in ("img", "audio", "video", "embed", "iframe", "source"):
+        return el.attrs.get("src", "")
+    if el.tag == "time":
+        return el.attrs.get("datetime") or node_text(el)
+    if el.tag == "data":
+        return el.attrs.get("value") or node_text(el)
+    return node_text(el)
+
+
+def _vocab_iri(itemtype, name):
+    # relative names resolve against the itemtype's vocabulary
+    # (itemtype minus its last path segment) — schema.org/Article +
+    # "headline" -> schema.org/headline, matching what WDC emits
+    if "://" in name or name.startswith("urn:"):
+        return name
+    if itemtype and "/" in itemtype:
+        return itemtype.rsplit("/", 1)[0] + "/" + name
+    return "urn:prop:" + name
+
+
+def _microdata_row(url, raw):
+    rows = []
+    counter = [0]
+
+    def walk_item(el, itemtype):
+        """el carries itemscope: mint an id, emit its type and
+        properties; returns the item id."""
+        item_id = "%s#item%d" % (url, counter[0])
+        counter[0] += 1
+        if itemtype:
+            rows.append((url, item_id, _RDF_TYPE, itemtype))
+
+        def scan(n):
             if isinstance(n, str):
-                parts.append(n)
+                return
+            prop = n.attrs.get("itemprop")
+            nested = "itemscope" in n.attrs
+            if prop is not None:
+                if nested:
+                    obj = walk_item(n, n.attrs.get("itemtype"))
+                else:
+                    obj = _microdata_value(n)
+                for name in prop.split():
+                    rows.append((url, item_id, _vocab_iri(itemtype, name),
+                                 obj))
+                if nested:
+                    return      # nested item scanned already
+            elif nested:
+                # an itemscope without itemprop starts a NEW top-level
+                # item, handled by the outer scan
                 return
             for c in n.children:
-                walk(c)
+                scan(c)
 
-        walk(node)
-        return normalize_space("".join(parts))
+        for c in el.children:
+            scan(c)
+        return item_id
 
-    RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+    def find_top(n):
+        if isinstance(n, str):
+            return
+        if "itemscope" in n.attrs and "itemprop" not in n.attrs:
+            walk_item(n, n.attrs.get("itemtype"))
+            return
+        for c in n.children:
+            find_top(c)
 
-    for pdf in it:
-        rows = []
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            tree = parse_html(decode_html(bytes(raw)))
-            counter = [0]
-
-            def prop_value(el):
-                # HTML5 microdata value rules (§5.2.4), the subset
-                # WDC-style extractors implement
-                if el.tag == "meta":
-                    return el.attrs.get("content", "")
-                if el.tag in ("a", "link", "area"):
-                    return el.attrs.get("href", "")
-                if el.tag in ("img", "audio", "video", "embed",
-                              "iframe", "source"):
-                    return el.attrs.get("src", "")
-                if el.tag == "time":
-                    return el.attrs.get("datetime") or _text(el)
-                if el.tag == "data":
-                    return el.attrs.get("value") or _text(el)
-                return _text(el)
-
-            def vocab_iri(itemtype, name):
-                # relative names resolve against the itemtype's
-                # vocabulary (itemtype minus its last path segment) —
-                # schema.org/Article + "headline" -> schema.org/headline,
-                # matching what WDC emits
-                if "://" in name or name.startswith("urn:"):
-                    return name
-                if itemtype and "/" in itemtype:
-                    return itemtype.rsplit("/", 1)[0] + "/" + name
-                return "urn:prop:" + name
-
-            def walk_item(el, itemtype):
-                """el carries itemscope: mint an id, emit its type
-                and properties; returns the item id."""
-                item_id = "%s#item%d" % (url, counter[0])
-                counter[0] += 1
-                if itemtype:
-                    rows.append((url, item_id, RDF_TYPE, itemtype))
-
-                def scan(n):
-                    if isinstance(n, str):
-                        return
-                    prop = n.attrs.get("itemprop")
-                    nested = "itemscope" in n.attrs
-                    if prop is not None:
-                        if nested:
-                            child_id = walk_item(
-                                n, n.attrs.get("itemtype"))
-                            obj = child_id
-                        else:
-                            obj = prop_value(n)
-                        for name in prop.split():
-                            rows.append((url, item_id,
-                                         vocab_iri(itemtype, name),
-                                         obj))
-                        if nested:
-                            return      # nested item scanned already
-                    elif nested:
-                        # an itemscope without itemprop starts a NEW
-                        # top-level item, handled by the outer scan
-                        return
-                    for c in n.children:
-                        scan(c)
-
-                for c in el.children:
-                    scan(c)
-                return item_id
-
-            def find_top(n):
-                if isinstance(n, str):
-                    return
-                if "itemscope" in n.attrs and "itemprop" not in n.attrs:
-                    walk_item(n, n.attrs.get("itemtype"))
-                    return
-                for c in n.children:
-                    find_top(c)
-
-            find_top(tree)
-        yield pd.DataFrame(rows, columns=["url", "item_id", "pred",
-                                          "obj"])
+    find_top(parse_html(decode_html(raw)))
+    return rows
 
 
 def microdata_triples(pages: DataFrame) -> DataFrame:
@@ -574,39 +500,31 @@ def microdata_triples(pages: DataFrame) -> DataFrame:
     §5.2.4 element rules (meta@content, a@href, img@src,
     time@datetime, else text).
 
-    Scale shape: Arrow-batched mapInPandas over (url, html) — same
+    Scale shape: one :func:`map_rows` pass over (url, html) — same
     contract as the table/extract stages: one pass per page, page
     bytes dropped at the stage boundary, no shuffle."""
-    return (pages.select("url", "html")
-            .mapInPandas(_microdata_batches, schema=MICRODATA_SCHEMA))
+    return map_rows(pages.select("url", "html"), _microdata_row,
+                    MICRODATA_SCHEMA)
 
 
 ALTERNATES_SCHEMA = "url string, hreflang string, href string"
 
 
-def _alternate_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..htmlelements import decode_html, parse_html
+def _alternate_row(url, raw):
+    rows = []
 
-    for pdf in it:
-        rows = []
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            tree = parse_html(decode_html(bytes(raw)))
+    def scan(n):
+        if isinstance(n, str):
+            return
+        if (n.tag == "link"
+                and "alternate" in (n.attrs.get("rel") or "").split()
+                and n.attrs.get("hreflang") and n.attrs.get("href")):
+            rows.append((url, n.attrs["hreflang"], n.attrs["href"]))
+        for c in n.children:
+            scan(c)
 
-            def scan(n):
-                if isinstance(n, str):
-                    return
-                if (n.tag == "link"
-                        and "alternate" in
-                        (n.attrs.get("rel") or "").split()
-                        and n.attrs.get("hreflang")
-                        and n.attrs.get("href")):
-                    rows.append((url, n.attrs["hreflang"],
-                                 n.attrs["href"]))
-                for c in n.children:
-                    scan(c)
-
-            scan(tree)
-        yield pd.DataFrame(rows, columns=["url", "hreflang", "href"])
+    scan(parse_html(decode_html(raw)))
+    return rows
 
 
 def hreflang_alternates(pages: DataFrame) -> DataFrame:
@@ -617,8 +535,8 @@ def hreflang_alternates(pages: DataFrame) -> DataFrame:
     ``linking.bitext_candidates``).  Real DOM parse, Arrow-batched,
     no shuffle; returns (url, hreflang, href), one row per declared
     alternate."""
-    return (pages.select("url", "html")
-            .mapInPandas(_alternate_batches, schema=ALTERNATES_SCHEMA))
+    return map_rows(pages.select("url", "html"), _alternate_row,
+                    ALTERNATES_SCHEMA)
 
 
 ISO_DATE_RE = (r"\b((?:19|20)\d{2}-(?:0[1-9]|1[0-2])"
@@ -702,45 +620,37 @@ _SOCIAL_PREFIXES = {"og:": "og", "twitter:": "twitter",
                     "article:": "og", "fb:": "og"}
 
 
-def _social_meta_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..htmlelements import decode_html, parse_html
+def _social_meta_row(url, raw):
+    rows = []
 
-    for pdf in it:
-        rows = []
-        for url, raw in zip(pdf["url"], pdf["html"]):
-            tree = parse_html(decode_html(bytes(raw)))
-            pos = [0]
-
-            def scan(n):
-                if isinstance(n, str):
-                    return
-                if n.tag == "meta":
-                    # OG spec says property=, Twitter says name=, and
-                    # the wild web uses both interchangeably -- accept
-                    # whichever attribute carries a known prefix
-                    # (property= wins when both are present).
-                    key = None
-                    for attr in ("property", "name"):
-                        v = n.attrs.get(attr)
-                        if v:
-                            for pfx in _SOCIAL_PREFIXES:
-                                if v.startswith(pfx):
-                                    key = v
-                                    break
-                        if key:
+    def scan(n):
+        if isinstance(n, str):
+            return
+        if n.tag == "meta":
+            # OG spec says property=, Twitter says name=, and the wild
+            # web uses both interchangeably -- accept whichever
+            # attribute carries a known prefix (property= wins when
+            # both are present).
+            key = None
+            for attr in ("property", "name"):
+                v = n.attrs.get(attr)
+                if v:
+                    for pfx in _SOCIAL_PREFIXES:
+                        if v.startswith(pfx):
+                            key = v
                             break
-                    content = n.attrs.get("content")
-                    if key and content is not None:
-                        ns = next(v for k, v in _SOCIAL_PREFIXES
-                                  .items() if key.startswith(k))
-                        rows.append((url, ns, key, content, pos[0]))
-                        pos[0] += 1
-                for c in n.children:
-                    scan(c)
+                if key:
+                    break
+            content = n.attrs.get("content")
+            if key and content is not None:
+                ns = next(v for k, v in _SOCIAL_PREFIXES.items()
+                          if key.startswith(k))
+                rows.append((url, ns, key, content, len(rows)))
+        for c in n.children:
+            scan(c)
 
-            scan(tree)
-        yield pd.DataFrame(rows, columns=["url", "ns", "prop",
-                                          "content", "pos"])
+    scan(parse_html(decode_html(raw)))
+    return rows
 
 
 def social_meta_tags(pages: DataFrame) -> DataFrame:
@@ -759,12 +669,11 @@ def social_meta_tags(pages: DataFrame) -> DataFrame:
     wild web); non-social metas (viewport, description, robots) are
     ignored here -- they have their own extractors.
 
-    Scale shape: Arrow-batched ``mapInPandas`` over (url, html),
+    Scale shape: one :func:`map_rows` pass over (url, html),
     one pass per page, page bytes dropped at the stage boundary,
     no shuffle."""
-    return (pages.select("url", "html")
-            .mapInPandas(_social_meta_batches,
-                         schema=SOCIAL_META_SCHEMA))
+    return map_rows(pages.select("url", "html"), _social_meta_row,
+                    SOCIAL_META_SCHEMA)
 
 
 #: prop -> card field; og and twitter both feed the same field and

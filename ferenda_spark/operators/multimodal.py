@@ -8,12 +8,12 @@ AV streams raise ``NotImplementedError`` (the container has no
 ffmpeg — that residue is the one declared stub).  The default path is
 a deterministic fake derived from the raw bytes so the plumbing can be
 oracle-verified independently of decode.  Everything Spark-side —
-schema, Arrow batch shape, ``mapInPandas`` plumbing, explode of
+schema, Arrow batch shape, the ``map_rows`` plumbing, explode of
 variable-length frame samples — is real and tested, which is the part
 that must survive a 100 TB media corpus:
 
 * the binary column never leaves the JVM except through Arrow batches
-  (``mapInPandas``, bounded by ``maxRecordsPerBatch``);
+  (``rowmap.map_rows``, bounded by ``maxRecordsPerBatch``);
 * decode output is a fixed narrow schema so downstream stages prune the
   (huge) blob column immediately;
 * frame sampling emits one row per frame from inside the same Arrow
@@ -22,11 +22,9 @@ that must survive a 100 TB media corpus:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
+
+from ..rowmap import map_rows
 
 IMAGE_META_SCHEMA = ("doc_id long, width int, height int, n_pixels long, "
                      "format string, n_bytes long")
@@ -254,42 +252,36 @@ def synth_wav_blobs(documents: DataFrame) -> DataFrame:
 
 def audio_meta(media: DataFrame) -> DataFrame:
     """(doc_id, channels, sample_rate, bits, n_samples, duration_ms,
-    n_bytes) via mapInPandas over Arrow batches of the binary column —
-    same plumbing shape as :func:`image_meta`, real RIFF parse."""
+    n_bytes) via :func:`map_rows` over the binary column — same
+    plumbing shape as :func:`image_meta`, real RIFF parse;
+    undecodable blobs drop."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "channels", "sample_rate", "bits",
-                "n_samples", "duration_ms", "n_bytes"]
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                m = wav_meta_bytes(bytes(blob))
-                if m is not None:
-                    rows.append((int(doc_id), m["channels"],
-                                 m["sample_rate"], m["bits"],
-                                 m["n_samples"], m["duration_ms"],
-                                 m["n_bytes"]))
-            yield pd.DataFrame(rows, columns=cols)
+    def row(doc_id, blob):
+        m = wav_meta_bytes(blob)
+        if m is not None:
+            yield (doc_id, m["channels"], m["sample_rate"], m["bits"],
+                   m["n_samples"], m["duration_ms"], m["n_bytes"])
 
-    return media.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+    return map_rows(media.select("doc_id", "content"), row,
+                    AUDIO_META_SCHEMA)
 
 
 def image_meta(media: DataFrame, real: bool = False) -> DataFrame:
     """(doc_id, width, height, n_pixels, format, n_bytes) via
-    mapInPandas over Arrow batches of the binary column."""
+    :func:`map_rows` over the binary column.  With ``real=True`` a
+    blob :func:`decode_bytes` cannot decode drops its row instead of
+    failing the job."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [decode_bytes(bytes(b), real=real)
-                     for b in pdf["content"]]
-            out = pd.DataFrame(metas)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            out["n_pixels"] = (out["width"].astype("int64")
-                               * out["height"].astype("int64"))
-            yield out[["doc_id", "width", "height", "n_pixels",
-                       "format", "n_bytes"]]
+    def row(doc_id, blob):
+        try:
+            m = decode_bytes(blob, real=real)
+        except NotImplementedError:
+            return
+        yield (doc_id, m["width"], m["height"], m["width"] * m["height"],
+               m["format"], m["n_bytes"])
 
-    return media.mapInPandas(batches, schema=IMAGE_META_SCHEMA)
+    return map_rows(media.select("doc_id", "content"), row,
+                    IMAGE_META_SCHEMA)
 
 
 def sample_frames(media: DataFrame, fps: float = 2.0) -> DataFrame:
@@ -298,20 +290,13 @@ def sample_frames(media: DataFrame, fps: float = 2.0) -> DataFrame:
     Arrow pass.  frame_md5 fingerprints the sampled "frame" slice."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                b = bytes(blob)
-                n_frames = 1 + len(b) % 4
-                for i in range(n_frames):
-                    sl = b[i::n_frames][:64]
-                    rows.append((int(doc_id), i, i / fps,
-                                 hashlib.md5(sl).hexdigest()))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx",
-                                              "frame_ts", "frame_md5"])
+    def row(doc_id, b):
+        n_frames = 1 + len(b) % 4
+        for i in range(n_frames):
+            yield (doc_id, i, i / fps,
+                   hashlib.md5(b[i::n_frames][:64]).hexdigest())
 
-    return media.mapInPandas(batches, schema=FRAME_SCHEMA)
+    return map_rows(media.select("doc_id", "content"), row, FRAME_SCHEMA)
 
 
 # ------------------------------------------------------------- dHash
@@ -375,20 +360,17 @@ def gray_dhash_bytes(b: bytes) -> int | None:
 
 
 def image_dhash(media: DataFrame) -> DataFrame:
-    """(doc_id, dhash) via mapInPandas over Arrow batches — the same
-    plumbing shape as :func:`image_meta`, real byte-level kernel.
-    Undecodable blobs are dropped (the quarantine discipline)."""
+    """(doc_id, dhash) via :func:`map_rows` — the same plumbing shape
+    as :func:`image_meta`, real byte-level kernel.  Undecodable blobs
+    are dropped (the quarantine discipline)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                hv = gray_dhash_bytes(bytes(blob))
-                if hv is not None:
-                    rows.append((int(doc_id), hv))
-            yield pd.DataFrame(rows, columns=["doc_id", "dhash"])
+    def row(doc_id, blob):
+        hv = gray_dhash_bytes(blob)
+        if hv is not None:
+            yield (doc_id, hv)
 
-    return media.mapInPandas(batches, schema="doc_id long, dhash long")
+    return map_rows(media.select("doc_id", "content"), row,
+                    "doc_id long, dhash long")
 
 
 def dhash_hamming_pairs(hashes: DataFrame, bands: int = 4,
@@ -593,24 +575,18 @@ def synth_exif_blobs(documents: DataFrame) -> DataFrame:
 
 def exif_meta(media: DataFrame) -> DataFrame:
     """(doc_id, width, height, orientation, x_resolution,
-    datetime_original, n_bytes) via mapInPandas over Arrow batches —
-    same plumbing as :func:`image_meta`/:func:`audio_meta`, real
-    TIFF/IFD walk, no shuffle; undecodable blobs drop (quarantine)."""
+    datetime_original, n_bytes) via :func:`map_rows` — same plumbing
+    as :func:`image_meta`/:func:`audio_meta`, real TIFF/IFD walk, no
+    shuffle; undecodable blobs drop (quarantine)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "width", "height", "orientation",
-                "x_resolution", "datetime_original", "n_bytes"]
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                m = exif_meta_bytes(bytes(blob))
-                if m is not None:
-                    rows.append((int(doc_id), m["width"], m["height"],
-                                 m["orientation"], m["x_resolution"],
-                                 m["datetime_original"], m["n_bytes"]))
-            yield pd.DataFrame(rows, columns=cols)
+    def row(doc_id, blob):
+        m = exif_meta_bytes(blob)
+        if m is not None:
+            yield (doc_id, m["width"], m["height"], m["orientation"],
+                   m["x_resolution"], m["datetime_original"], m["n_bytes"])
 
-    return media.mapInPandas(batches, schema=EXIF_META_SCHEMA)
+    return map_rows(media.select("doc_id", "content"), row,
+                    EXIF_META_SCHEMA)
 
 
 # ------------------------------------------- image-text pair mining
@@ -638,34 +614,25 @@ def image_text_pairs(pages: DataFrame, min_words: int = 2) -> DataFrame:
     output co-partitions with the page scan and the (img_src) join
     to the blob store is the only exchange."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..htmlelements import decode_html, parse_html
-        cols = ["url", "img_idx", "img_src", "alt_text",
-                "n_alt_words", "kept"]
-        for pdf in it:
-            rows = []
-            for url, raw in zip(pdf["url"], pdf["html"]):
-                tree = parse_html(decode_html(bytes(raw)))
-                stack, imgs = [tree], []
-                while stack:
-                    node = stack.pop()
-                    if isinstance(node, str):
-                        continue
-                    if node.tag == "img":
-                        imgs.append(node)
-                    stack.extend(reversed(node.children))
-                for idx, img in enumerate(imgs):
-                    alt = img.attrs.get("alt")
-                    words = alt.split() if alt else []
-                    kept = (len(words) >= min_words
-                            and (alt or "").strip().lower()
-                            not in ALT_STOPLIST)
-                    rows.append((url, idx, img.attrs.get("src"),
-                                 alt, len(words), kept))
-            yield pd.DataFrame(rows, columns=cols)
+    from ..htmlelements import decode_html, parse_html
 
-    return (pages.select("url", "html")
-            .mapInPandas(batches, schema=IMG_ALT_SCHEMA))
+    def row(url, raw):
+        stack, imgs = [parse_html(decode_html(raw))], []
+        while stack:
+            node = stack.pop()
+            if isinstance(node, str):
+                continue
+            if node.tag == "img":
+                imgs.append(node)
+            stack.extend(reversed(node.children))
+        for idx, img in enumerate(imgs):
+            alt = img.attrs.get("alt")
+            words = alt.split() if alt else []
+            kept = (len(words) >= min_words
+                    and (alt or "").strip().lower() not in ALT_STOPLIST)
+            yield (url, idx, img.attrs.get("src"), alt, len(words), kept)
+
+    return map_rows(pages.select("url", "html"), row, IMG_ALT_SCHEMA)
 
 
 # ------------------------------------------------ video shot detect
@@ -715,20 +682,13 @@ def shot_boundaries(frames: DataFrame,
     frame_idx, dhash, distance, is_boundary)."""
     from pyspark.sql import Window
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, idx, blob in zip(pdf["doc_id"],
-                                         pdf["frame_idx"],
-                                         pdf["content"]):
-                h = gray_dhash_bytes(bytes(blob))
-                if h is not None:
-                    rows.append((int(doc_id), int(idx), h))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "dhash"])
+    def row(doc_id, idx, blob):
+        h = gray_dhash_bytes(blob)
+        if h is not None:
+            yield (doc_id, idx, h)
 
-    hashed = frames.mapInPandas(
-        batches, schema="doc_id long, frame_idx int, dhash long")
+    hashed = map_rows(frames.select("doc_id", "frame_idx", "content"), row,
+                      "doc_id long, frame_idx int, dhash long")
     w = Window.partitionBy("doc_id").orderBy(F.col("frame_idx").asc())
     prev = F.lag("dhash").over(w)
     dist = F.when(prev.isNotNull(),
@@ -951,21 +911,12 @@ def video_meta(media: DataFrame) -> DataFrame:
     MP4 via :func:`mp4_meta_bytes`, WebM via :func:`webm_meta_bytes`;
     genuinely-undecodable containers (AVI/FLV/stream codecs — no
     ffmpeg here) are dropped, same contract as the other header
-    readers.  Arrow-batched mapInPandas, header-only reads."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                raw = bytes(blob)
-                m = mp4_meta_bytes(raw) or webm_meta_bytes(raw)
-                if m:
-                    rows.append((int(doc_id), m["container"],
-                                 m["timescale"], m["duration_ms"],
-                                 m["width"], m["height"],
-                                 m["n_bytes"]))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "container", "timescale",
-                               "duration_ms", "width", "height",
-                               "n_bytes"])
+    readers.  One :func:`map_rows` pass, header-only reads."""
+    def row(doc_id, raw):
+        m = mp4_meta_bytes(raw) or webm_meta_bytes(raw)
+        if m:
+            yield (doc_id, m["container"], m["timescale"],
+                   m["duration_ms"], m["width"], m["height"], m["n_bytes"])
 
-    return media.mapInPandas(batches, schema=VIDEO_META_SCHEMA)
+    return map_rows(media.select("doc_id", "content"), row,
+                    VIDEO_META_SCHEMA)

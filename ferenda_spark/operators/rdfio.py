@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..rowmap import map_rows
+
 # One term: IRI | blank node | literal (+ optional @lang / ^^<dt>).
 _IRI = r"<[^<>\"{}|^`\\\x00-\x20]*>"
 _BNODE = r"_:[A-Za-z][A-Za-z0-9._-]*"
@@ -141,40 +143,20 @@ def parse_turtle_docs(docs: DataFrame, id_col: str = "doc_id",
     obj_datatype, parse_ok, error); triples within a doc are emitted
     in sorted order (deterministic output for a given input, though
     downstream consumers treat it as a multiset)."""
-    from typing import Iterator
+    from ..turtle import parse_turtle
 
-    import pandas as pd
+    def row(did, text):
+        try:
+            triples = sorted(parse_turtle(text or ""))
+        except Exception as e:
+            return [(did, None, None, None, None, None, None, False,
+                     "%s: %s" % (type(e).__name__, e))]
+        return [(did, s, p, o[1], False, None, None, True, None)
+                if o[0] == "uri" else
+                (did, s, p, o[1], True, o[2], o[3], True, None)
+                for s, p, o in triples]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..turtle import parse_turtle
-        cols = ("doc_id", "subj", "pred", "obj", "is_literal",
-                "obj_lang", "obj_datatype", "parse_ok", "error")
-        for pdf in it:
-            out = {c: [] for c in cols}
-
-            def push(did, s=None, p=None, o=None, lit=None, lang=None,
-                     dt=None, ok=True, err=None):
-                for c, v in zip(cols, (did, s, p, o, lit, lang, dt,
-                                       ok, err)):
-                    out[c].append(v)
-
-            for did, text in zip(pdf[id_col].tolist(),
-                                 pdf[col].tolist()):
-                try:
-                    triples = sorted(parse_turtle(text or ""))
-                except Exception as e:
-                    push(did, ok=False,
-                         err="%s: %s" % (type(e).__name__, e))
-                    continue
-                for s, p, o in triples:
-                    if o[0] == "uri":
-                        push(did, s, p, o[1], False)
-                    else:
-                        push(did, s, p, o[1], True, o[2], o[3])
-            yield pd.DataFrame(out)
-
-    return (docs.select(id_col, col)
-            .mapInPandas(batches, schema=TURTLE_SCHEMA))
+    return map_rows(docs.select(id_col, col), row, TURTLE_SCHEMA)
 
 
 def bnode_canonicalize(quads: DataFrame, rounds: int = 3,

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..rowmap import map_rows
+
 
 def current_versions(df: DataFrame, key_col: str, ts_col: str,
                      tiebreak: str | None = None) -> DataFrame:
@@ -76,15 +78,13 @@ def make_patches(original: DataFrame, edited: DataFrame,
     reproduces ``edited`` exactly.
 
     Per-document diffing is inherently row-local Python (difflib), so
-    it runs in the sanctioned Arrow-batched ``mapInPandas`` lane; the
+    it runs in the sanctioned ``map_rows`` row-mapper lane; the
     edited set is review-sized (patches are hand-made), not
     corpus-sized.  Each changed span is expanded with context until
     its ``find`` string is UNIQUE in the original — string replace
     applies every occurrence, so uniqueness is what makes the
     roundtrip exact (the unified-diff analogue of context lines)."""
     import difflib
-
-    import pandas as pd
 
     def _spans(orig: str, edit: str):
         sm = difflib.SequenceMatcher(a=orig, b=edit, autojunk=False)
@@ -153,25 +153,18 @@ def make_patches(original: DataFrame, edited: DataFrame,
             return [(orig, edit)]
         return out
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for key, orig, edit in zip(pdf["_k"], pdf["_o"],
-                                       pdf["_e"]):
-                if orig == edit:
-                    continue
-                for find, repl in _spans(orig, edit):
-                    rows.append((key, find, repl))
-            yield pd.DataFrame(rows, columns=[key_col, "find",
-                                              "replace"])
+    def row(key, orig, edit):
+        if orig == edit:
+            return []
+        return [(key, find, repl) for find, repl in _spans(orig, edit)]
 
     joined = (original
               .select(F.col(key_col).alias("_k"),
                       F.col(text_col).alias("_o"))
               .join(edited.select(F.col(key_col).alias("_k"),
                                   F.col(text_col).alias("_e")), "_k"))
-    return joined.mapInPandas(
-        batches, "%s string, find string, replace string" % key_col)
+    return map_rows(joined, row,
+                    "%s string, find string, replace string" % key_col)
 
 
 def zorder_keys(df: DataFrame, col_a: str, col_b: str,

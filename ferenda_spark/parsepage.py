@@ -2,7 +2,7 @@
 sections, preamble, kind}.
 
 This is the per-document sequential logic that runs *inside* the Arrow
-``mapInPandas`` extract stage (operators/extract.py) — the analogue of
+``map_rows`` extract stage (operators/extract.py) — the analogue of
 the reference's ``parse(doc)`` body (documentrepository.py:1118-1141:
 soup -> metadata -> element tree; rfc.py:456-474: TextReader -> FSM).
 Kept Spark-free for golden testing.

@@ -347,30 +347,23 @@ PDF_SCHEMA = ("url string, page int, box int, left int, top int, "
               "font_size int, text string, error string")
 
 
+def _textbox_row(url, xml_text):
+    """One pdf2xml document -> its textbox rows; where the XML stops
+    parsing, one quarantine row (page and box -1, the error text)
+    follows the boxes read so far."""
+    try:
+        for page in parse_pdf2xml(xml_text):
+            for i, box in enumerate(page):
+                yield (url, page.number, i, box.left, box.top, box.width,
+                       box.height, box.font.family, box.font.size,
+                       str(box), None)
+    except Exception as e:
+        yield (url, -1, -1, 0, 0, 0, 0, None, 0, None, str(e))
+
+
 def pdf_textboxes(docs, xml_col: str = "xml", url_col: str = "url"):
     """Spark stage: (url, pdf2xml) -> one row per textbox; a document
     whose XML fails to parse yields a single quarantine row (I4)
     instead of failing the batch."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for url, xml_text in zip(pdf[url_col], pdf[xml_col]):
-                try:
-                    for page in parse_pdf2xml(xml_text):
-                        for i, box in enumerate(page):
-                            rows.append((url, page.number, i, box.left,
-                                         box.top, box.width,
-                                         box.height, box.font.family,
-                                         box.font.size, str(box),
-                                         None))
-                except Exception as e:
-                    rows.append((url, -1, -1, 0, 0, 0, 0, None, 0,
-                                 None, str(e)))
-            yield pd.DataFrame(rows, columns=[
-                "url", "page", "box", "left", "top", "width", "height",
-                "font_family", "font_size", "text", "error"])
-
-    return (docs.select(url_col, xml_col)
-            .mapInPandas(batches, schema=PDF_SCHEMA))
+    from .rowmap import map_rows
+    return map_rows(docs.select(url_col, xml_col), _textbox_row, PDF_SCHEMA)

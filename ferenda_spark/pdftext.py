@@ -966,33 +966,43 @@ PDF_TEXT_SCHEMA = ("url string, page int, line int, top int, left int, "
                    "size int, font string, text string, error string")
 
 
+def _pdf_lines_row(url, blob):
+    """One PDF -> its text-line rows; where the document stops parsing,
+    one quarantine row (page and line -1, the error text) follows the
+    lines read so far."""
+    try:
+        for page in extract_text_pages(blob):
+            for j, ln in enumerate(page["lines"]):
+                yield (url, page["number"], j, ln["top"], ln["left"],
+                       ln["width"], ln["height"], ln["size"], ln["font"],
+                       ln["text"], None)
+    except Exception as e:
+        yield (url, -1, -1, 0, 0, 0, 0, 0, None, None, str(e))
+
+
 def pdf_blobs_to_lines(docs, blob_col: str = "blob", url_col: str = "url"):
     """Spark stage: (url, pdf bytes) -> one row per text line; broken
     documents yield a quarantine row (I4) instead of failing the
     batch."""
-    import pandas as pd
+    from .rowmap import map_rows
+    return map_rows(docs.select(url_col, blob_col), _pdf_lines_row,
+                    PDF_TEXT_SCHEMA)
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for url, blob in zip(pdf[url_col], pdf[blob_col]):
-                try:
-                    for page in extract_text_pages(bytes(blob)):
-                        for j, ln in enumerate(page["lines"]):
-                            rows.append((url, page["number"], j,
-                                         ln["top"], ln["left"],
-                                         ln["width"], ln["height"],
-                                         ln["size"], ln["font"],
-                                         ln["text"], None))
-                except Exception as e:
-                    rows.append((url, -1, -1, 0, 0, 0, 0, 0, None,
-                                 None, str(e)))
-            yield pd.DataFrame(rows, columns=[
-                "url", "page", "line", "top", "left", "width",
-                "height", "size", "font", "text", "error"])
 
-    return (docs.select(url_col, blob_col)
-            .mapInPandas(batches, schema=PDF_TEXT_SCHEMA))
+def _one_page_pdf(content: str) -> bytes:
+    """A minimal uncompressed one-page PDF (standard-14 Helvetica, no
+    embedding) around the content stream ``content``."""
+    return ("%%PDF-1.4\n"
+            "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
+            "2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 "
+            "/MediaBox [0 0 612 792] >> endobj\n"
+            "3 0 obj << /Type /Page /Parent 2 0 R /Resources "
+            "<< /Font << /F1 4 0 R >> >> /Contents 5 0 R >> endobj\n"
+            "4 0 obj << /Type /Font /Subtype /Type1 "
+            "/BaseFont /Helvetica >> endobj\n"
+            "5 0 obj << /Length %d >> stream\n%s\nendstream endobj\n"
+            "trailer << /Root 1 0 R >>\n%%%%EOF\n"
+            % (len(content), content)).encode("latin-1")
 
 
 def synth_pdf_blobs(docs, id_col: str = "doc_id"):
@@ -1000,35 +1010,14 @@ def synth_pdf_blobs(docs, id_col: str = "doc_id"):
     form, mirrored by the DuckDB oracle): one page, a standard-14 font
     (no embedding), two Tj lines whose content is a function of the
     id.  Uncompressed streams so the blob is byte-stable."""
-    import pandas as pd
+    from .rowmap import map_rows
 
-    def batches(it):
-        for b in it:
-            rows = []
-            for did in b[id_col]:
-                d = int(did)
-                content = ("BT /F1 12 Tf 72 720 Td (Line one %d) Tj "
-                           "0 -20 Td (Second %d) Tj ET" % (d, d % 9))
-                body = (
-                    "%%PDF-1.4\n"
-                    "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-                    "2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 "
-                    "/MediaBox [0 0 612 792] >> endobj\n"
-                    "3 0 obj << /Type /Page /Parent 2 0 R /Resources "
-                    "<< /Font << /F1 4 0 R >> >> /Contents 5 0 R >> "
-                    "endobj\n"
-                    "4 0 obj << /Type /Font /Subtype /Type1 "
-                    "/BaseFont /Helvetica >> endobj\n"
-                    "5 0 obj << /Length %d >> stream\n%s\nendstream "
-                    "endobj\n"
-                    "trailer << /Root 1 0 R >>\n%%%%EOF\n"
-                    % (len(content), content))
-                rows.append(("https://example.org/pdfbin/%d" % d,
-                             body.encode("latin-1")))
-            yield pd.DataFrame(rows, columns=["url", "blob"])
+    def row(d):
+        yield ("https://example.org/pdfbin/%d" % d, _one_page_pdf(
+            "BT /F1 12 Tf 72 720 Td (Line one %d) Tj "
+            "0 -20 Td (Second %d) Tj ET" % (d, d % 9)))
 
-    return (docs.select(id_col)
-            .mapInPandas(batches, "url string, blob binary"))
+    return map_rows(docs.select(id_col), row, "url string, blob binary")
 
 
 def synth_pdf_section_blobs(docs, id_col: str = "doc_id"):
@@ -1038,37 +1027,14 @@ def synth_pdf_section_blobs(docs, id_col: str = "doc_id"):
     PDF -> layout-classified sections -> triples driver query (the
     reference's fixed-layout source path, fixedlayoutsource.py +
     pdfanalyze font-size segmentation)."""
-    import pandas as pd
+    from .rowmap import map_rows
 
-    def batches(it):
-        for b in it:
-            rows = []
-            for did in b[id_col]:
-                d = int(did)
-                parts = ["BT /F1 24 Tf 72 740 Td (Doc %d) Tj" % d]
-                for s in range(1, 2 + d % 3):
-                    parts.append("/F1 18 Tf 0 -40 Td (Section %d) Tj"
-                                 % s)
-                    parts.append("/F1 12 Tf 0 -20 Td (Body %d %d) Tj"
-                                 % (d, s))
-                content = " ".join(parts) + " ET"
-                body = (
-                    "%%PDF-1.4\n"
-                    "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-                    "2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 "
-                    "/MediaBox [0 0 612 792] >> endobj\n"
-                    "3 0 obj << /Type /Page /Parent 2 0 R /Resources "
-                    "<< /Font << /F1 4 0 R >> >> /Contents 5 0 R >> "
-                    "endobj\n"
-                    "4 0 obj << /Type /Font /Subtype /Type1 "
-                    "/BaseFont /Helvetica >> endobj\n"
-                    "5 0 obj << /Length %d >> stream\n%s\nendstream "
-                    "endobj\n"
-                    "trailer << /Root 1 0 R >>\n%%%%EOF\n"
-                    % (len(content), content))
-                rows.append(("https://example.org/pdfdoc/%d" % d,
-                             body.encode("latin-1")))
-            yield pd.DataFrame(rows, columns=["url", "blob"])
+    def row(d):
+        parts = ["BT /F1 24 Tf 72 740 Td (Doc %d) Tj" % d]
+        for s in range(1, 2 + d % 3):
+            parts.append("/F1 18 Tf 0 -40 Td (Section %d) Tj" % s)
+            parts.append("/F1 12 Tf 0 -20 Td (Body %d %d) Tj" % (d, s))
+        yield ("https://example.org/pdfdoc/%d" % d,
+               _one_page_pdf(" ".join(parts) + " ET"))
 
-    return (docs.select(id_col)
-            .mapInPandas(batches, "url string, blob binary"))
+    return map_rows(docs.select(id_col), row, "url string, blob binary")

@@ -40,6 +40,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
+from .rowmap import map_rows
+
 CRLF = b"\r\n"
 
 RECORDS_SCHEMA = ("warc_file string, record_idx int, warc_type string, "
@@ -159,26 +161,14 @@ def build_warc(records: list[dict], gzip_per_record: bool = False) -> bytes:
 def warc_records(files: DataFrame, file_col: str = "path",
                  content_col: str = "content") -> DataFrame:
     """(file, binary content) -> one row per WARC record, payload
-    included — an Arrow-batched ``mapInPandas`` pass (per-file
-    parallelism; downstream projections prune the payload column)."""
-    import pandas as pd
+    included — one ``rowmap.map_rows`` pass (per-file parallelism;
+    downstream projections prune the payload column)."""
+    def row(fname, blob):
+        for i, rec in enumerate(iter_warc(blob)):
+            yield (fname, i, rec["warc_type"], rec["url"], rec["warc_ts"],
+                   rec["http_status"], rec["content_type"], rec["payload"])
 
-    src = files.select(F.col(file_col).alias("warc_file"),
-                       F.col(content_col).alias("content"))
-
-    def batches(it):
-        cols = ["warc_file", "record_idx", "warc_type", "url",
-                "warc_ts", "http_status", "content_type", "payload"]
-        for pdf in it:
-            rows = []
-            for fname, blob in zip(pdf["warc_file"], pdf["content"]):
-                for i, rec in enumerate(iter_warc(bytes(blob))):
-                    rows.append((fname, i, rec["warc_type"], rec["url"],
-                                 rec["warc_ts"], rec["http_status"],
-                                 rec["content_type"], rec["payload"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(batches, schema=RECORDS_SCHEMA)
+    return map_rows(files.select(file_col, content_col), row, RECORDS_SCHEMA)
 
 
 def pages_from_warc(records: DataFrame) -> DataFrame:

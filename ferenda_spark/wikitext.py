@@ -19,7 +19,7 @@ against the reference's own downloaded fixtures
   removal, link -> label with the MediaWiki *linktrail* merge
   (``[[personuppgift]]er`` -> ``personuppgifter``), external links ->
   label, bold/italic quotes, heading/list markers;
-* :func:`wiki_pages` — the Spark stage: one Arrow-batched mapInPandas
+* :func:`wiki_pages` — the Spark stage: one ``rowmap.map_rows`` pass
   over (url, xml) rows -> (url, title, page_id, ts, text, categories,
   links).
 """
@@ -142,28 +142,19 @@ def wiki_pages(docs, xml_col: str = "xml", url_col: str = "url"):
     with many <page> elements fans out to one row each.  A document
     whose XML fails to parse yields one quarantine row instead of
     failing the batch (I4)."""
-    import pandas as pd
+    from .rowmap import map_rows
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for url, xml_text in zip(pdf[url_col], pdf[xml_col]):
-                try:
-                    for rec in parse_dump(xml_text):
-                        wt = rec["text"] or ""
-                        rows.append((url, rec["title"], rec["page_id"],
-                                     rec["ts"], strip_wikitext(wt),
-                                     wiki_categories(wt),
-                                     wiki_links(wt), None))
-                except Exception as e:
-                    rows.append((url, None, None, None, None, [], [],
-                                 str(e)))
-            yield pd.DataFrame(rows, columns=[
-                "url", "title", "page_id", "ts", "text", "categories",
-                "links", "error"])
+    def row(url, xml_text):
+        try:
+            for rec in parse_dump(xml_text):
+                wt = rec["text"] or ""
+                yield (url, rec["title"], rec["page_id"], rec["ts"],
+                       strip_wikitext(wt), wiki_categories(wt),
+                       wiki_links(wt), None)
+        except Exception as e:
+            yield (url, None, None, None, None, [], [], str(e))
 
-    return (docs.select(url_col, xml_col)
-            .mapInPandas(batches, schema=WIKI_SCHEMA))
+    return map_rows(docs.select(url_col, xml_col), row, WIKI_SCHEMA)
 
 
 # --------------------------------------------------------------------
@@ -353,35 +344,25 @@ def wiki_render(docs, text_col: str = "wikitext", url_col: str = "url",
                 base: str = ""):
     """Spark stage: (url, wikitext) -> rendered XHTML body string +
     section count + subject names — the render half of the wiki
-    pipeline as one Arrow-batched mapInPandas (same stage shape as the
+    pipeline as one ``rowmap.map_rows`` pass (same stage shape as the
     HTML parse; parse failures quarantine per-document, I4)."""
-    import pandas as pd
+    from .rowmap import map_rows
     resolve = make_lagen_resolver(base) if base else None
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for url, wt in zip(pdf[url_col], pdf[text_col]):
-                try:
-                    secs, subjects = render_sections(wt or "",
-                                                     resolve=resolve)
-                    parts = []
-                    n_sections = 0
-                    for heading, div in secs:
-                        if heading is not None:
-                            n_sections += 1
-                            h2 = ET.Element("h2")
-                            h2.text = heading
-                            parts.append(ET.tostring(
-                                h2, encoding="unicode"))
-                        parts.append(ET.tostring(div,
-                                                 encoding="unicode"))
-                    rows.append((url, n_sections, subjects,
-                                 "".join(parts), None))
-                except Exception as e:
-                    rows.append((url, None, [], None, str(e)))
-            yield pd.DataFrame(rows, columns=[
-                "url", "n_sections", "subjects", "body_html", "error"])
+    def row(url, wt):
+        try:
+            secs, subjects = render_sections(wt or "", resolve=resolve)
+            parts = []
+            n_sections = 0
+            for heading, div in secs:
+                if heading is not None:
+                    n_sections += 1
+                    h2 = ET.Element("h2")
+                    h2.text = heading
+                    parts.append(ET.tostring(h2, encoding="unicode"))
+                parts.append(ET.tostring(div, encoding="unicode"))
+            return [(url, n_sections, subjects, "".join(parts), None)]
+        except Exception as e:
+            return [(url, None, [], None, str(e))]
 
-    return (docs.select(url_col, text_col)
-            .mapInPandas(batches, schema=WIKI_RENDER_SCHEMA))
+    return map_rows(docs.select(url_col, text_col), row, WIKI_RENDER_SCHEMA)

@@ -18,8 +18,8 @@ test/files/wordreader/*):
   quarantined per-document instead of failing the stage.
 
 Spark surface: :func:`extract_word_blobs` maps (url, blob) rows
-through detection + docx text extraction in one Arrow-batched
-mapInPandas stage — the same stage shape as the HTML parse; .doc rows
+through detection + docx text extraction in one ``rowmap.map_rows``
+stage — the same stage shape as the HTML parse; .doc rows
 are quarantined with an error instead of failing the stage (I4).
 """
 
@@ -110,51 +110,39 @@ def docx_text(data: bytes) -> str:
 WORD_SCHEMA = ("url string, filetype string, text string, error string")
 
 
+def _word_row(url, data):
+    """One blob -> (url, filetype, text, error); a blob that does not
+    parse gives a quarantine row naming the filetype."""
+    from .docbinary import BadOleFile, doc_text
+    try:
+        # detect first, parse ONCE: read_word's docbook output is unused
+        # for .doc text extraction, and running it before doc_text would
+        # walk the whole CFB/piece-table twice per row
+        kind = detect_wordfile_type(data)
+        if kind == "doc":
+            try:
+                text = doc_text(data)
+            except BadOleFile as e:
+                raise ExternalToolMissing("unparseable .doc: %s" % e)
+        elif kind == "docx":
+            text = docx_text(data)
+        else:
+            raise ValueError("not a word document")
+        return [(url, kind, text, None)]
+    except ExternalToolMissing:
+        return [(url, "doc", None, "unparseable word binary")]
+    except ValueError:
+        return [(url, "unknown", None, "not a word document")]
+    except Exception as e:          # quarantine, not crash
+        return [(url, "error", None, str(e))]
+
+
 def extract_word_blobs(docs, blob_col: str = "blob", url_col: str = "url"):
     """Spark stage: (url, blob) -> (url, filetype, text, error);
     unparseable .doc rows carry an error instead of failing the batch
     (per-doc quarantine, I4)."""
-    import pandas as pd
-
-    from .docbinary import doc_text
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for url, blob in zip(pdf[url_col], pdf[blob_col]):
-                data = bytes(blob)
-                try:
-                    # detect first, parse ONCE: read_word's docbook
-                    # output is unused for .doc text extraction, and
-                    # running it before doc_text would walk the whole
-                    # CFB/piece-table twice per row
-                    kind = detect_wordfile_type(data)
-                    if kind == "doc":
-                        from .docbinary import BadOleFile
-                        try:
-                            text = doc_text(data)
-                        except BadOleFile as e:
-                            raise ExternalToolMissing(
-                                "unparseable .doc: %s" % e)
-                    elif kind == "docx":
-                        _, xml_bytes = read_word(data)
-                        text = docx_xml_text(xml_bytes)
-                    else:
-                        raise ValueError("not a word document")
-                    rows.append((url, kind, text, None))
-                except ExternalToolMissing:
-                    rows.append((url, "doc", None,
-                                 "unparseable word binary"))
-                except ValueError:
-                    rows.append((url, "unknown", None,
-                                 "not a word document"))
-                except Exception as e:          # quarantine, not crash
-                    rows.append((url, "error", None, str(e)))
-            yield pd.DataFrame(rows, columns=["url", "filetype",
-                                              "text", "error"])
-
-    return (docs.select(url_col, blob_col)
-            .mapInPandas(batches, schema=WORD_SCHEMA))
+    from .rowmap import map_rows
+    return map_rows(docs.select(url_col, blob_col), _word_row, WORD_SCHEMA)
 
 
 def synth_doc_blobs(docs, id_col: str = "doc_id"):
@@ -162,22 +150,14 @@ def synth_doc_blobs(docs, id_col: str = "doc_id"):
     — OLE2 header, FAT, directory, FIB, piece table): the corpus twin
     that exercises docbinary.cfb_streams/doc_text on 100% of rows, so
     the word_docs_legacy oracle pins the .doc branch alone."""
-    import pandas as pd
-
     from .docbinary import synth_doc_blob
+    from .rowmap import map_rows
 
-    def batches(it):
-        for b in it:
-            rows = []
-            for did in b[id_col]:
-                d = int(did)
-                rows.append(("https://example.org/word/%d" % d,
-                             synth_doc_blob(["Word doc %d" % d,
-                                             "Paragraph %d" % (d % 7)])))
-            yield pd.DataFrame(rows, columns=["url", "blob"])
+    def row(d):
+        yield ("https://example.org/word/%d" % d,
+               synth_doc_blob(["Word doc %d" % d, "Paragraph %d" % (d % 7)]))
 
-    return (docs.select(id_col)
-            .mapInPandas(batches, "url string, blob binary"))
+    return map_rows(docs.select(id_col), row, "url string, blob binary")
 
 
 def synth_docx_blobs(docs, id_col: str = "doc_id"):
@@ -189,35 +169,25 @@ def synth_docx_blobs(docs, id_col: str = "doc_id"):
     end-to-end; every 34th a truncated OLE stub exercising the
     quarantine branch.  Zip members carry a fixed timestamp so blobs
     are byte-stable across runs."""
-    import pandas as pd
-
     from .docbinary import synth_doc_blob
+    from .rowmap import map_rows
 
-    def batches(it):
-        for b in it:
-            rows = []
-            for did in b[id_col]:
-                d = int(did)
-                url = "https://example.org/word/%d" % d
-                if d % 34 == 0:
-                    rows.append((url, OLE_MAGIC + b"\x00" * 24))
-                    continue
-                if d % 17 == 0:
-                    rows.append((url, synth_doc_blob(
-                        ["Word doc %d" % d, "Paragraph %d" % (d % 7)])))
-                    continue
-                xml = ('<?xml version="1.0"?>'
-                       '<w:document xmlns:w="%s"><w:body>'
-                       '<w:p><w:r><w:t>Word doc %d</w:t></w:r></w:p>'
-                       '<w:p><w:r><w:t>Paragraph %d</w:t></w:r></w:p>'
-                       '</w:body></w:document>' % (W_NS, d, d % 7))
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
-                    zi = zipfile.ZipInfo("word/document.xml",
-                                         (1980, 1, 1, 0, 0, 0))
-                    zf.writestr(zi, xml)
-                rows.append((url, buf.getvalue()))
-            yield pd.DataFrame(rows, columns=["url", "blob"])
+    def row(d):
+        url = "https://example.org/word/%d" % d
+        if d % 34 == 0:
+            return [(url, OLE_MAGIC + b"\x00" * 24)]
+        if d % 17 == 0:
+            return [(url, synth_doc_blob(
+                ["Word doc %d" % d, "Paragraph %d" % (d % 7)]))]
+        xml = ('<?xml version="1.0"?>'
+               '<w:document xmlns:w="%s"><w:body>'
+               '<w:p><w:r><w:t>Word doc %d</w:t></w:r></w:p>'
+               '<w:p><w:r><w:t>Paragraph %d</w:t></w:r></w:p>'
+               '</w:body></w:document>' % (W_NS, d, d % 7))
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
+            zf.writestr(zipfile.ZipInfo("word/document.xml",
+                                        (1980, 1, 1, 0, 0, 0)), xml)
+        return [(url, buf.getvalue())]
 
-    return (docs.select(id_col)
-            .mapInPandas(batches, "url string, blob binary"))
+    return map_rows(docs.select(id_col), row, "url string, blob binary")

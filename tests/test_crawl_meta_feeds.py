@@ -65,6 +65,21 @@ def test_feed_unknown_root_yields_nothing(spark):
     assert feed_entries(feeds).count() == 0
 
 
+def test_feed_malformed_or_non_utf8_yields_nothing(spark):
+    """A truncated or non-UTF-8 feed drops its own rows, like an
+    unknown root; the good feed next to it still parses."""
+    from ferenda_spark.operators.crawl import feed_entries
+    feeds = spark.createDataFrame(
+        [("bad", b"<rss version='2.0'><channel><item><title>t"),
+         ("latin1", "<rss><channel><item><title>\u00e9</title></item>"
+                    "</channel></rss>".encode("latin-1")),
+         ("good", b"<rss><channel><item><title>ok</title></item>"
+                  b"</channel></rss>")],
+        "feed_url string, xml binary")
+    got = [(r.feed_url, r.title) for r in feed_entries(feeds).collect()]
+    assert got == [("good", "ok")]
+
+
 def test_atom_entry_without_link_or_dates(spark):
     from ferenda_spark.operators.crawl import feed_entries
     xml = ('<feed xmlns="http://www.w3.org/2005/Atom">'

@@ -289,6 +289,19 @@ def test_sitemap_parses_namespaced_and_sparse_entries(spark):
         ("https://a/1", "2024-01-02", 7), ("https://a/2", None, None)]
 
 
+def test_sitemap_malformed_or_non_utf8_file_yields_no_rows(spark):
+    """One broken sitemap file drops its own entries; the good files
+    around it still parse and the job does not fail."""
+    from ferenda_spark.operators.crawl import sitemap_entries
+    good = (b'<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
+            b'<url><loc>https://a/%d</loc></url></urlset>')
+    df = spark.createDataFrame(
+        [(good % 1,), (b"<urlset><url><loc>https://a/x</loc>",),
+         (b"<urlset>\xff\xfe</urlset>",), (good % 2,)], "xml binary")
+    got = sorted(r.loc for r in sitemap_entries(df).collect())
+    assert got == ["https://a/1", "https://a/2"]
+
+
 # ------------------------------------------------------------ frontier
 
 def test_frontier_interleaves_hosts(spark):

@@ -682,6 +682,19 @@ def test_compression_ratio_matches_local_zlib(spark):
     assert out["u3"].ratio is None      # empty
 
 
+def test_compression_ratio_null_text_and_null_id(spark):
+    """A NULL text gives NULL sizes and ratio (not the 4-byte string
+    "None"), and a NULL id stays NULL."""
+    import zlib
+    from ferenda_spark.operators.cleaning import compression_ratio
+    df = spark.createDataFrame([("u1", None), (None, "abc")],
+                               "url string, text string")
+    got = {(r.url, r.n_bytes, r.n_compressed, r.ratio)
+           for r in compression_ratio(df).collect()}
+    nc = len(zlib.compress(b"abc", 6))
+    assert got == {("u1", None, None, None), (None, 3, nc, nc / 3)}
+
+
 # -------------------------------------------------------- inverse rules
 
 def test_inverse_rules_finds_inverses_not_symmetry(spark):

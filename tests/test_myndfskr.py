@@ -52,7 +52,7 @@ def test_fs_metadata_contains_all_golden_triples(name):
 
 
 def test_fs_metadata_spark_stage(tmp_path):
-    """The mapInPandas stage over all 19 fixture texts produces the
+    """The map_rows stage over all 19 fixture texts produces the
     same triple multiset as the pure function."""
     from ferenda_spark.session import get_spark
     from ferenda_spark.myndfskr import fs_metadata

@@ -1,5 +1,5 @@
 """Spark-side operator tests: resumable stages (north rule),
-multimodal mapInPandas plumbing, graph fixpoints.
+multimodal map_rows plumbing, graph fixpoints.
 
 One module-scoped local[4] session keeps the suite fast; the heavy
 oracle comparison lives in scripts/check_correctness.py (driver gate).
@@ -187,6 +187,23 @@ def test_real_decode_jpeg_png_headers():
                 b"BM" + b"\x00" * 24, b"RIFF1234WAVEdata"):
         with _pytest.raises(NotImplementedError):
             decode_bytes(bad, real=True)
+
+
+def test_image_meta_real_drops_undecodable_blob(spark):
+    """decode_bytes(real=True) raises on an unknown blob; the stage
+    drops that row instead of failing the job, like image_dhash and
+    video_meta."""
+    from ferenda_spark.operators.multimodal import PNG_MAGIC, image_meta
+    png = (PNG_MAGIC + b"\x00\x00\x00\x0dIHDR"
+           + (640).to_bytes(4, "big") + (480).to_bytes(4, "big")
+           + b"\x08\x02\x00\x00\x00" + b"\x00\x00\x00\x00")
+    media = spark.createDataFrame(
+        [(1, png), (2, b"RIFF1234WAVEdata"), (3, b""), (4, png)],
+        "doc_id long, content binary")
+    got = sorted((r.doc_id, r.width, r.height, r.n_pixels, r.format)
+                 for r in image_meta(media, real=True).collect())
+    assert got == [(1, 640, 480, 307200, "image/png"),
+                   (4, 640, 480, 307200, "image/png")]
 
 
 def test_synth_image_blobs_roundtrip(spark):
@@ -460,7 +477,7 @@ def test_embedding_near_dupes_blocked_pairs(spark):
 
 
 def test_distill_rfc_pages_matches_goldens_distributed(spark):
-    """The distill stage run THROUGH Spark (mapInPandas, 4 partitions)
+    """The distill stage run THROUGH Spark (map_rows, 4 partitions)
     reproduces the reference's distilled goldens exactly — the
     distributed path, not just the pure function."""
     import glob, os

@@ -360,6 +360,9 @@ def test_strand_pairs_same_host_same_template_only(spark):
         ("https://other.org/fr/about",),    # wrong host
         ("https://ex.org/docs/en",),        # trailing lang segment
         ("https://ex.org/docs/fr",),
+        # only the first lang segment is the marker: these differ in
+        # their second segment, so they are not translations
+        ("https://ex.org/en/docs/fr/x",), ("https://ex.org/fr/docs/de/x",),
     ], "url string")
     rows = strand_url_pairs(pages).collect()
     got = {(r.host, r.template, r.lang_a, r.lang_b) for r in rows}

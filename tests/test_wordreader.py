@@ -118,7 +118,7 @@ def test_docx_breaks_and_tabs_separate_text():
 def test_spark_word_stage_extracts_and_quarantines(request):
     """extract_word_blobs: docx rows yield text, real .doc rows yield
     NATIVELY extracted text, truncated OLE is quarantined, garbage is
-    flagged — one mapInPandas stage."""
+    flagged — one map_rows stage."""
     from ferenda_spark.session import get_spark
     from ferenda_spark.wordreader import OLE_MAGIC, extract_word_blobs
     spark = get_spark(app="wordreader-tests", master="local[4]")
