@@ -2733,7 +2733,7 @@ def _q_taxonomy_reduction(spark, sf_dir):
     edges = (_e(0, 1).unionByName(_e(1, 2)).unionByName(_e(2, 3))
              .unionByName(_e(0, 2)).unionByName(_e(0, 3))
              .unionByName(_e(1, 3)))
-    return (transitive_reduction(edges, max_depth=4)
+    return (transitive_reduction(edges)
             .orderBy("doc_a", "doc_b"))
 
 

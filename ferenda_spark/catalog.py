@@ -7,8 +7,8 @@ partitions by a bounded hash bucket of the document context (the
 sandbox stand-in for Iceberg's url-prefix/warc_ts partition spec —
 bounded cardinality, balanced, prunable on equality), writes are
 atomic-by-replace (S5's write-if-different idempotence comes from the
-outputs being deterministic functions of inputs), ``merge_upsert``
-is the conditional-ingest MERGE (S2/I5), and ``dump_nt`` is the
+outputs being deterministic functions of inputs; the conditional-ingest
+MERGE, S2/I5, is ``snaptable.SnapshotTable.merge``), and ``dump_nt`` is the
 whole-dataset N-Triples dump (S7, relate_all_teardown
 documentrepository.py:1787-1806) with a stable sort for byte-stable
 output (O3).
@@ -59,29 +59,6 @@ def write_triples(triples: DataFrame, store_dir: str,
                 .repartition("context_bucket"))
     return write_stage(bucketed, store_dir, table,
                        partition_by=("context_bucket",), mode=mode)
-
-
-def merge_upsert(spark: SparkSession, store_dir: str, table: str,
-                 new_df: DataFrame, key_cols: tuple) -> DataFrame:
-    """MERGE semantics (S2/I5): rows of the existing table whose key
-    doesn't appear in ``new_df`` survive; new rows replace matching
-    keys.  Production is a single atomic Iceberg MERGE INTO.
-
-    Only the table-absent case degrades to the new frame; any OTHER
-    read failure (corrupt footer, permissions, transient FS error)
-    propagates — swallowing it would silently turn MERGE into
-    full-replace and drop every surviving row.  The merged frame is
-    materialized (localCheckpoint) before returning, because the
-    caller's next step is overwriting the very path the lazy plan
-    reads — a Spark self-overwrite that corrupts the table otherwise."""
-    path = stage_path(store_dir, table)
-    if not os.path.exists(path):
-        return new_df
-    existing = spark.read.parquet(path)
-    keys = list(key_cols)
-    kept = existing.join(new_df.select(*keys).distinct(), keys,
-                         "left_anti")
-    return kept.unionByName(new_df).localCheckpoint()
 
 
 def _nt_escape(s):

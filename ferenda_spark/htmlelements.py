@@ -184,28 +184,21 @@ def node_text(node: Element) -> str:
     return normalize_space("".join(_raw_text(node)))
 
 
-def _first_title_text(root: Element):
-    t = root.find("title")
-    if t is None:
-        return None
-    txt = as_plaintext(t)
-    return txt if txt else None
-
-
-def extract_document(raw: bytes, default_lang: str = "en") -> dict:
-    """One-pass page extraction: returns dict with keys
-    ``text`` (body plaintext, the byte-identity invariant),
-    ``title``, ``lang``, plus ``links`` (href list, document order,
-    deduped — download_get_basefiles semantics,
-    documentrepository.py:834-855) and ``pre_text`` (concatenated
-    ``<pre>`` content verbatim, for the FSM text-document path)."""
+def walk_document(raw: bytes, default_lang: str = "en"):
+    """The one HTML walk behind :func:`extract_document` and the parse
+    stage (``parsepage.parse_page``): returns ``(fields, pruned)``,
+    ``pruned`` the filtered ``<body>`` tree (or None) and ``fields``
+    the ``text``, ``title``, ``lang``, ``links`` and ``pre_text`` of
+    :func:`extract_document`, except that an empty ``<title>`` gives
+    ``""`` here (None only when there is no ``<title>``)."""
     html_text = decode_html(raw)
     tree = parse_html(html_text)
 
     html_el = tree.find("html") or tree
     lang = (html_el.attrs.get("xml:lang") or html_el.attrs.get("lang")
             or default_lang)
-    title = _first_title_text(tree)
+    title_el = tree.find("title")
+    title = as_plaintext(title_el) if title_el is not None else None
 
     body = tree.find("body")
     content = body if body is not None else tree
@@ -223,7 +216,20 @@ def extract_document(raw: bytes, default_lang: str = "en") -> dict:
         "lang": lang,
         "links": links,
         "pre_text": "\n\n".join(pres) if pres else None,
-    }
+    }, pruned
+
+
+def extract_document(raw: bytes, default_lang: str = "en") -> dict:
+    """One-pass page extraction: returns dict with keys
+    ``text`` (body plaintext, the byte-identity invariant),
+    ``title`` (None when absent or empty), ``lang``, plus ``links``
+    (href list, document order, deduped — download_get_basefiles
+    semantics, documentrepository.py:834-855) and ``pre_text``
+    (concatenated ``<pre>`` content verbatim, for the FSM
+    text-document path)."""
+    fields, _ = walk_document(raw, default_lang)
+    fields["title"] = fields["title"] or None
+    return fields
 
 
 def _collect(node, tag, attr, out, seen):

@@ -30,6 +30,7 @@ graph programs over the link/redirect tables:
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
+from decimal import Decimal, InvalidOperation
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -181,6 +182,17 @@ def anchor_text_profile(links: DataFrame,
 SITEMAP_SCHEMA = ("loc string, lastmod string, priority_tenths int")
 
 
+def _priority_tenths(txt):
+    """A sitemaps.org ``<priority>`` (0.0 to 1.0) as integer tenths,
+    truncated ("0.75" -> 7) so no float is ever compared; None for a
+    value that is not a number in that range."""
+    try:
+        d = Decimal(txt)
+    except InvalidOperation:
+        return None
+    return int(d * 10) if d.is_finite() and 0 <= d <= 1 else None
+
+
 def _sitemap_row(raw):
     try:
         root = ET.fromstring(raw.decode("utf-8"))
@@ -198,10 +210,7 @@ def _sitemap_row(raw):
             elif tag == "lastmod":
                 lastmod = (child.text or "").strip()
             elif tag == "priority":
-                txt = (child.text or "").strip()
-                # "0.d" -> d; integer so no float compare
-                prio = int(txt.split(".", 1)[1][:1]) \
-                    if "." in txt else int(txt) * 10
+                prio = _priority_tenths((child.text or "").strip())
         if loc:
             yield (loc, lastmod, prio)
 
@@ -212,7 +221,8 @@ def sitemap_entries(sitemaps: DataFrame,
     namespace-agnostic) into (loc, lastmod, priority_tenths) rows —
     the crawl-seeding stage.  Real ElementTree parse, Arrow-batched;
     priority is kept as integer tenths so no float ever crosses the
-    engine boundary.  One sitemap file = one row in, its URL entries
+    engine boundary, NULL when it is not a number in [0, 1] (the
+    entry itself is kept).  One sitemap file = one row in, its URL entries
     out (UDTF shape, like the WARC reader); a file that is not
     well-formed UTF-8 XML yields no rows rather than failing the job."""
     return map_rows(sitemaps.select(xml_col), _sitemap_row, SITEMAP_SCHEMA)

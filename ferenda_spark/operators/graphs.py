@@ -1,11 +1,18 @@
 """Graph-shaped derived tables over the triples DF.
 
+* :func:`reach` — the one reachability fixpoint: a labeled,
+  layer-synchronous BFS (one join + one anti-join per round, lineage
+  cut with localCheckpoint) that runs to its first empty round.  Every
+  closure and BFS here (ispartof_closure, bfs_distances,
+  transitive_reduction, owl_entailment's transitive rule, scc_labels'
+  backward marking, bowtie_classes, harmonic_centrality) and the SPARQL
+  property paths are built on it, so none has an iteration cap that
+  could silently truncate a deep input.
 * :func:`ispartof_closure` — the annotations transitive closure (J3:
   ``?s dcterms:isPartOf* <uri>``, res/sparql/annotations.rq:1-20 +
   construct_annotations, documentrepository.py:2594-2611).  The part
   hierarchy is shallow (Section/Subsection/Subsubsection, SURVEY.md J3)
-  so the driver-side loop runs to fixpoint in <= 3 iterations; each
-  round is one shuffle join, lineage cut with localCheckpoint.
+  so the fixpoint ends after a handful of rounds.
 * :func:`citation_counts` — the reverse-reference join of the same
   annotation query (incoming ``dcterms:references`` per target).
 * :func:`pagerank` — graphanalyze.py:412-495 re-expressed as iterative
@@ -21,33 +28,86 @@ from pyspark.sql import DataFrame, functions as F
 from .. import vocab
 
 
-def ispartof_closure(triples: DataFrame, max_iter: int = 8) -> DataFrame:
+class ReachBudgetExceeded(RuntimeError):
+    """:func:`reach` visited more rows than its ``budget``; ``args``
+    is (budget, rows visited so far)."""
+
+
+def reach(edges: DataFrame, frontier: DataFrame,
+          max_hops: int | None = None,
+          budget: int | None = None) -> DataFrame:
+    """Labeled, layer-synchronous BFS: the one reachability fixpoint
+    behind every closure and BFS here and the SPARQL property paths.
+
+    ``edges`` is ``(u, v, *keys)``; ``frontier`` is ``(*labels, node,
+    dist)``, one row per (labels, node).  Each round joins the
+    frontier to the edges on ``node = u`` plus every key column the
+    frontier also carries, drops the (labels, node) pairs already
+    visited, and keeps the rest at ``dist + 1`` as the next frontier.
+    The loop stops at the first empty round, which always comes (a
+    round visits at least one new pair of a finite set), or after
+    ``max_hops`` rounds.  Returns the visited ``(*labels, node,
+    dist)``, seeds included; with every seed at one ``dist``, BFS
+    layering makes ``dist`` that plus the shortest hop count from the
+    seeds.  Labels and keys compare null-safe.
+
+    A round is one eager ``localCheckpoint`` and one ``count``.  The
+    checkpoint cuts lineage, and it makes every round's frame a fresh
+    leaf, so the visited anti-join never reads a union built from its
+    own output: the shape Spark 4.1's union constraint rewrite
+    miscompiles (NoSuchElementException on attribute ids).
+    ``budget`` bounds the visited rows while the fixpoint runs (the
+    SPARQL closure pair budget): past it, :class:`ReachBudgetExceeded`
+    is raised."""
+    labels = [c for c in frontier.columns if c not in ("node", "dist")]
+    keys = [c for c in edges.columns if c not in ("u", "v") and c in labels]
+    seen_cols = labels + ["node"]
+    step_on = F.col("f.node") == F.col("e.u")
+    for k in keys:
+        step_on = step_on & F.col("f." + k).eqNullSafe(F.col("e." + k))
+    seen_on = None
+    for c in seen_cols:
+        eq = F.col("n." + c).eqNullSafe(F.col("s." + c))
+        seen_on = eq if seen_on is None else seen_on & eq
+    edges = edges.localCheckpoint(eager=False).alias("e")
+    front = visited = frontier.localCheckpoint(eager=False)
+    total = visited.count() if budget is not None else 0
+    hop = 0
+    while max_hops is None or hop < max_hops:
+        hop += 1
+        nxt = (front.alias("f").join(edges, step_on)
+               .select(*[F.col("f." + c).alias(c) for c in labels],
+                       F.col("e.v").alias("node"),
+                       (F.col("f.dist") + 1).alias("dist"))
+               .alias("n")
+               .join(visited.select(*seen_cols).alias("s"), seen_on,
+                     "left_anti")
+               .distinct()
+               .localCheckpoint(eager=True))
+        n = nxt.count()
+        if n == 0:
+            break
+        total += n
+        if budget is not None and total > budget:
+            raise ReachBudgetExceeded(budget, total)
+        visited = visited.unionByName(nxt)
+        front = nxt
+    return visited
+
+
+def ispartof_closure(triples: DataFrame) -> DataFrame:
     """(uri, ancestor_uri, depth): every isPartOf ancestor of every
-    part, depth 1 = direct parent.  Fixpoint of closure ∘ edges."""
+    part, depth 1 = direct parent, shortest depth on a DAG with
+    shortcuts.  :func:`reach` seeded with the edges at depth 1."""
     edges = (triples
              .where(F.col("pred") == vocab.DCTERMS_ISPARTOF)
-             .select(F.col("subj").alias("uri"),
-                     F.col("obj").alias("ancestor_uri"))
-             .withColumn("depth", F.lit(1))
-             .localCheckpoint())
-    closure = edges
-    prev = closure.count()
-    for _ in range(max_iter):
-        step = (closure.alias("c")
-                .join(edges.alias("e"),
-                      F.col("c.ancestor_uri") == F.col("e.uri"))
-                .select(F.col("c.uri").alias("uri"),
-                        F.col("e.ancestor_uri").alias("ancestor_uri"),
-                        (F.col("c.depth") + 1).alias("depth")))
-        closure = (closure.unionByName(step)
-                   .groupBy("uri", "ancestor_uri")
-                   .agg(F.min("depth").alias("depth"))
-                   .localCheckpoint())
-        cur = closure.count()
-        if cur == prev:
-            break
-        prev = cur
-    return closure
+             .select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+             .distinct())
+    seeds = edges.select(F.col("u").alias("uri"), F.col("v").alias("node"),
+                         F.lit(1).alias("dist"))
+    return reach(edges, seeds).select(
+        "uri", F.col("node").alias("ancestor_uri"),
+        F.col("dist").alias("depth"))
 
 
 def deps_edges(triples: DataFrame, uri_patterns: DataFrame) -> DataFrame:
@@ -824,32 +884,15 @@ def bfs_distances(edges: DataFrame, sources: DataFrame,
     for every node within ``max_hops`` of a seed; unreachable nodes
     are absent.
 
-    Each round is one frontier-keyed equi-join plus one anti-join
-    against the visited set — the frontier is the only thing that
-    moves, so per-round cost is O(edges touched by the frontier), the
-    shape that survives billion-node link graphs.  Both accumulating
-    frames are localCheckpointed per round (each feeds two consumers
-    next round; without the cut the plan doubles per hop — same
-    discipline as pagerank/kcore above).  BFS layers make min()
-    automatic: a node is claimed by the first (= shortest) frontier
-    that reaches it and the anti-join blocks every later one."""
+    One :func:`reach` from the seeds at dist 0: per round one
+    frontier-keyed equi-join plus one anti-join against the visited
+    set, so per-round cost is O(edges touched by the frontier), the
+    shape that survives billion-node link graphs."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    visited = (sources.select(F.col("node").cast("long"),
-                              F.lit(0).alias("dist"))
-               .distinct().localCheckpoint(eager=True))
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (frontier.join(e, frontier["node"] == e["u"])
-               .select(F.col("v").alias("node"),
-                       F.lit(hop).alias("dist"))
-               .distinct()
-               .join(visited.select("node"), "node", "anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+    seeds = (sources.select(F.col("node").cast("long"),
+                            F.lit(0).alias("dist"))
+             .distinct())
+    return reach(e, seeds, max_hops)
 
 
 def neighbor_feature_agg(edges: DataFrame, features: DataFrame,
@@ -935,8 +978,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4,
     return labels
 
 
-def transitive_reduction(edges: DataFrame, max_depth: int = 8,
-                         src: str = "doc_a",
+def transitive_reduction(edges: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b") -> DataFrame:
     """Transitive reduction of a DAG: drop every edge (u, v) that is
     implied by a longer path u -> ... -> v — the cleanup step after
@@ -944,33 +986,21 @@ def transitive_reduction(edges: DataFrame, max_depth: int = 8,
     "elements such as copper" plus "elements such as metals" make the
     element->copper edge redundant.
 
-    Semi-naive: reach_k = reach_{k-1} ∘ edges accumulates every pair
-    connected by a path of length 2..max_depth, then one anti-join
-    removes edges whose endpoints appear there.  Each round is the
-    same dst/src equi-join a pagerank round does; the accumulator is
-    localCheckpointed per round (it feeds the next compose and the
-    final anti-join).  Depth is bounded by the taxonomy's height —
-    single digits for real hypernym DAGs — so the loop terminates
-    early via the empty-delta check.  On a cyclic input the pairs are
-    still well-defined (a cycle member reaches itself in >=2 steps,
-    so cycle edges are all "implied" and dropped); DAG-ness is the
-    caller's contract.  Returns the surviving (src, dst) edges."""
+    One :func:`reach` seeded with the two-hop pairs gives every pair
+    connected by a path of 2 or more edges; one anti-join removes the
+    edges whose endpoints appear there.  On a cyclic input the pairs
+    are still well-defined (a cycle member reaches itself in >=2
+    steps, so cycle edges are all "implied" and dropped); DAG-ness is
+    the caller's contract.  Returns the surviving (src, dst) edges."""
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .distinct().localCheckpoint(eager=True))
-    step = e
-    implied = None
-    for _ in range(max_depth - 1):
-        step = (step.join(e.select(F.col("u").alias("v"),
-                                   F.col("v").alias("w")), "v")
-                .select("u", F.col("w").alias("v"))
-                .distinct().localCheckpoint(eager=True))
-        if step.isEmpty():
-            break
-        implied = (step if implied is None
-                   else implied.unionByName(step).distinct()
-                   .localCheckpoint(eager=True))
-    if implied is None:
-        return e.select(F.col("u").alias(src), F.col("v").alias(dst))
+    two_hop = (e.join(e.select(F.col("u").alias("v"),
+                               F.col("v").alias("w")), "v")
+               .select(F.col("u").alias("root"), F.col("w").alias("node"),
+                       F.lit(2).alias("dist"))
+               .distinct())
+    implied = reach(e, two_hop).select(F.col("root").alias("u"),
+                                       F.col("node").alias("v"))
     return (e.join(implied, ["u", "v"], "anti")
             .select(F.col("u").alias(src), F.col("v").alias(dst)))
 
@@ -1153,8 +1183,7 @@ def rdf_list_flatten(triples: DataFrame,
 
 
 def owl_entailment(triples: DataFrame, ontology: DataFrame,
-                   inferred_only: bool = False,
-                   max_iter: int = 8) -> DataFrame:
+                   inferred_only: bool = False) -> DataFrame:
     """OWL-RL property-axiom forward chaining, the step beyond
     ``rdfs_entailment`` (rules prp-inv1/2, prp-symp, prp-trp of the
     OWL 2 RL profile — the fragment materializable at scale):
@@ -1163,10 +1192,10 @@ def owl_entailment(triples: DataFrame, ontology: DataFrame,
       (o p s) — both directions, per the axiom's symmetry.
     * ``p rdf:type owl:SymmetricProperty``:  (s p o) -> (o p s).
     * ``p rdf:type owl:TransitiveProperty``:  (s p o), (o p x) ->
-      (s p x) — a bounded semi-naive closure per transitive
-      property (union + distinct + count-convergence, the
-      ispartof_closure shape; ``max_iter`` caps depth so chain
-      length 2^max_iter is reachable).
+      (s p x) — one :func:`reach` over every transitive property
+      at once: labels (subj, context, pred) seeded at each fact's
+      object, ``pred`` also the edge key, so each chain is closed to
+      its full depth, one hop per round.
 
     The ontology is dimension-sized and collected driver-side (same
     sanctioned shape as rdfs_entailment); inverse/symmetric rules are
@@ -1212,27 +1241,16 @@ def owl_entailment(triples: DataFrame, ontology: DataFrame,
                     F.col("subj").alias("obj"),
                     null_s.alias("obj_datatype"),
                     null_s.alias("obj_lang"), "context"))
-    for p in trans:
-        # closure per property: paths double per round
-        cur = (base.where(F.col("pred") == p)
-               .select("subj", "obj", "context").distinct()
-               .localCheckpoint(eager=True))
-        n = cur.count()
-        for _ in range(max_iter):
-            step = (cur.alias("a")
-                    .join(cur.alias("b"),
-                          F.col("a.obj") == F.col("b.subj"))
-                    .select(F.col("a.subj").alias("subj"),
-                            F.col("b.obj").alias("obj"),
-                            F.col("a.context").alias("context")))
-            cur = (cur.unionByName(step).distinct()
-                   .localCheckpoint(eager=True))
-            n2 = cur.count()
-            if n2 == n:
-                break
-            n = n2
-        parts.append(cur.select(
-            "subj", F.lit(p).alias("pred"), "obj",
+    if trans:
+        facts = (base.where(F.col("pred").isin(*trans))
+                 .select("subj", "pred", "obj", "context").distinct())
+        edges = facts.select(F.col("subj").alias("u"),
+                             F.col("obj").alias("v"), "pred").distinct()
+        seeds = facts.select("subj", "context", "pred",
+                             F.col("obj").alias("node"),
+                             F.lit(1).alias("dist"))
+        parts.append(reach(edges, seeds).select(
+            "subj", "pred", F.col("node").alias("obj"),
             null_s.alias("obj_datatype"), null_s.alias("obj_lang"),
             "context"))
     if not parts:
@@ -1247,8 +1265,8 @@ def owl_entailment(triples: DataFrame, ontology: DataFrame,
     return out
 
 
-def scc_labels(edges: DataFrame, src: str = "src", dst: str = "dst",
-               max_outer: int = 8, max_inner: int = 32) -> DataFrame:
+def scc_labels(edges: DataFrame, src: str = "src",
+               dst: str = "dst") -> DataFrame:
     """Strongly connected components by distributed coloring (Orzan
     2004; the algorithm behind Pegasus/GraphX SCC) — the directed
     counterpart of the sameAs connected-components canonicalizer in
@@ -1262,10 +1280,12 @@ def scc_labels(edges: DataFrame, src: str = "src", dst: str = "dst",
        the max — at fixpoint ``color(v)`` = max active vertex that
        reaches v (v included);
     2. vertices with ``color(v) == v`` are roots; the SCC of root c
-       is recovered by *backward marking within color c* to fixpoint
-       (u joins when it has an edge into a marked same-color vertex
-       — u already reaches c forward by its color, and now c reaches
-       u back, so u ∈ SCC(c));
+       is recovered by *backward marking within color c*: one
+       :func:`reach` from the roots over the reversed same-color
+       edges, ``color`` both label and key (u joins when it has an
+       edge into a marked same-color vertex — u already reaches c
+       forward by its color, and now c reaches u back, so
+       u ∈ SCC(c));
     3. marked vertices are emitted with ``scc = color`` (the max
        member id, matching the canonicalizer's max-representative
        convention) and removed; the remainder re-colors next round.
@@ -1274,11 +1294,12 @@ def scc_labels(edges: DataFrame, src: str = "src", dst: str = "dst",
     — shuffles keyed on vertex ids only, no collect; label frames
     are localCheckpointed per iteration (each feeds both the next
     join and the convergence count — the pagerank/HITS loop
-    discipline).  Convergence checks are ``count()`` actions per
-    round, the standard semi-naive fixpoint guard.  Worst case outer
-    rounds = number of "peel layers" (deep DAG chains degrade — the
-    documented quadratic risk shared with every coloring SCC); web
-    graphs peel in a handful.
+    discipline).  Coloring runs until no color changes; the outer
+    loop runs until no vertex is active, which always ends because
+    each round marks at least the largest active vertex.  Worst case
+    outer rounds = number of "peel layers" (deep DAG chains degrade —
+    the documented quadratic risk shared with every coloring SCC);
+    web graphs peel in a handful.
 
     Returns (node, scc).
     """
@@ -1293,9 +1314,7 @@ def scc_labels(edges: DataFrame, src: str = "src", dst: str = "dst",
              .localCheckpoint(eager=True))
     out = None
     active = verts
-    for _ in range(max_outer):
-        if active.limit(1).count() == 0:
-            break
+    while not active.isEmpty():
         ae = (e.join(active.withColumnRenamed("node", "u"), "u",
                      "left_semi")
               .join(active.withColumnRenamed("node", "v"), "v",
@@ -1303,7 +1322,7 @@ def scc_labels(edges: DataFrame, src: str = "src", dst: str = "dst",
               .localCheckpoint(eager=True))
         colors = active.withColumn("color", F.col("node")) \
                        .localCheckpoint(eager=True)
-        for _ in range(max_inner):
+        while True:
             upd = (ae.join(colors.select(F.col("node").alias("u"),
                                          "color"), "u")
                    .groupBy(F.col("v").alias("node"))
@@ -1318,28 +1337,16 @@ def scc_labels(edges: DataFrame, src: str = "src", dst: str = "dst",
             colors = nxt
             if changed == 0:
                 break
-        marked = (colors.where(F.col("color") == F.col("node"))
-                  .localCheckpoint(eager=True))
-        ce = (ae.join(colors.select(F.col("node").alias("u"),
-                                    F.col("color").alias("cu")), "u")
-              .join(colors.select(F.col("node").alias("v"),
-                                  F.col("color").alias("cv")), "v")
-              .where(F.col("cu") == F.col("cv"))
-              .select("u", "v", F.col("cu").alias("color"))
-              .localCheckpoint(eager=True))
-        for _ in range(max_inner):
-            grow = (ce.join(marked.select(F.col("node").alias("v"),
-                                          F.col("color").alias("mc")),
-                            "v")
-                    .where(F.col("color") == F.col("mc"))
-                    .select(F.col("u").alias("node"),
-                            F.col("color")))
-            nxt = marked.unionByName(grow).distinct() \
-                        .localCheckpoint(eager=True)
-            if nxt.count() == marked.count():
-                marked = nxt
-                break
-            marked = nxt
+        roots = colors.where(F.col("color") == F.col("node")).select(
+            "color", "node", F.lit(0).alias("dist"))
+        back = (ae.join(colors.select(F.col("node").alias("u"),
+                                      F.col("color").alias("cu")), "u")
+                .join(colors.select(F.col("node").alias("v"),
+                                    F.col("color").alias("cv")), "v")
+                .where(F.col("cu") == F.col("cv"))
+                .select(F.col("v").alias("u"), F.col("u").alias("v"),
+                        F.col("cu").alias("color")))
+        marked = reach(back, roots)
         found = marked.select("node", F.col("color").alias("scc"))
         out = found if out is None else out.unionByName(found)
         out = out.localCheckpoint(eager=True)
@@ -1351,18 +1358,15 @@ def scc_labels(edges: DataFrame, src: str = "src", dst: str = "dst",
 
 
 def bowtie_classes(edges: DataFrame, scc: DataFrame,
-                   src: str = "src", dst: str = "dst",
-                   max_rounds: int = 16) -> DataFrame:
+                   src: str = "src", dst: str = "dst") -> DataFrame:
     """Bow-tie decomposition of a directed graph around its largest
     SCC (Broder et al., WWW 2000): CORE (the largest SCC), IN (can
     reach the core), OUT (reachable from the core), OTHER (tendrils
     and disconnected).  Consumes :func:`scc_labels` output.
 
     Largest SCC = max size, ties to the smaller scc id (pure function
-    of the input).  IN/OUT are two BFS fixpoints (forward from core
-    on reversed edges, forward from core on edges) — the same
-    broadcast-frontier loop as ``bfs_distances``, reached-set
-    semi-joined per round.  Returns (node, cls).
+    of the input).  IN/OUT are two :func:`reach` fixpoints from the
+    core (on reversed edges, on edges).  Returns (node, cls).
     """
     sizes = (scc.groupBy("scc")
              .agg(F.count(F.lit(1)).alias("n")))
@@ -1373,25 +1377,14 @@ def bowtie_classes(edges: DataFrame, scc: DataFrame,
     core_id = top[0]["scc"]
     core = (scc.where(F.col("scc") == F.lit(core_id)).select("node")
             .localCheckpoint(eager=True))
+    seeds = core.withColumn("dist", F.lit(0))
     e = (edges.select(F.col(src).cast("long").alias("u"),
                       F.col(dst).cast("long").alias("v"))
          .distinct().localCheckpoint(eager=True))
 
-    def _reach(ed):
-        seen = core
-        for _ in range(max_rounds):
-            step = (ed.join(seen.withColumnRenamed("node", "u"), "u")
-                    .select(F.col("v").alias("node")))
-            nxt = seen.unionByName(step).distinct() \
-                      .localCheckpoint(eager=True)
-            if nxt.count() == seen.count():
-                return nxt
-            seen = nxt
-        return seen
-
-    out_set = _reach(e)
-    in_set = _reach(e.select(F.col("v").alias("u"),
-                             F.col("u").alias("v")))
+    out_set = reach(e, seeds).select("node")
+    in_set = reach(e.select(F.col("v").alias("u"), F.col("u").alias("v")),
+                   seeds).select("node")
     nodes = scc.select("node")
     return (nodes
             .join(core.withColumn("c", F.lit(1)), "node", "left")
@@ -1849,34 +1842,22 @@ def harmonic_centrality(edges: DataFrame, seeds: DataFrame,
     algorithm: the full-corpus all-pairs version is the same program
     with seeds = nodes.
 
-    Labeled layer-synchronous BFS: the frontier is keyed on
-    (seed, node) so one job round advances every seed's BFS at once
-    (the all-sources-simultaneous discipline of kg_betweenness);
+    One labeled :func:`reach`: the frontier is keyed on (seed,
+    node) so one job round advances every seed's BFS at once (the
+    all-sources-simultaneous discipline of kg_betweenness);
     per-seed shortest distance is implicit in BFS layering + the
     (seed, node) anti-join.  Frontier frames are bounded by
-    |seeds| × reachable-per-seed, localCheckpointed per round.
+    |seeds| × reachable-per-seed.
 
     Returns (node, n_seeds_reaching, harmonic) for nodes reached by
     at least one seed in 1..max_hops hops (seeds do not count
     themselves; 1/d is rounded to 6 after the sum)."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    visited = (seeds.select(F.col("node").cast("long").alias("seed"),
-                            F.col("node").cast("long").alias("node"),
-                            F.lit(0).alias("dist"))
-               .distinct().localCheckpoint(eager=True))
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (frontier.join(e, frontier["node"] == e["u"])
-               .select("seed", F.col("v").alias("node"),
-                       F.lit(hop).alias("dist"))
-               .distinct()
-               .join(visited.select("seed", "node"),
-                     ["seed", "node"], "anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    seeds = (seeds.select(F.col("node").cast("long").alias("seed"),
+                          F.col("node").cast("long").alias("node"),
+                          F.lit(0).alias("dist"))
+             .distinct())
+    visited = reach(e, seeds, max_hops)
     return (visited.where(F.col("dist") > 0)
             .groupBy("node")
             .agg(F.count(F.lit(1)).cast("long")

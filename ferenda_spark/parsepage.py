@@ -11,30 +11,14 @@ Kept Spark-free for golden testing.
 from __future__ import annotations
 
 from .docparsers import parse_html_sections, parse_rfc_text
-from .htmlelements import decode_html, parse_html, prune, as_plaintext
+from .htmlelements import walk_document
 
 
 def parse_page(raw: bytes, default_lang: str = "en") -> dict:
-    html_text = decode_html(raw)
-    tree = parse_html(html_text)
-
-    html_el = tree.find("html") or tree
-    lang = (html_el.attrs.get("xml:lang") or html_el.attrs.get("lang")
-            or default_lang)
-    title_el = tree.find("title")
-    title = as_plaintext(title_el) if title_el is not None else None
-
-    body = tree.find("body") or tree
-    pruned = prune(body)
-    text = as_plaintext(pruned) if pruned is not None else ""
-
-    links, seen = [], set()
-    _collect_links(pruned, links, seen)
-
-    pres = []
-    _collect_pre(body, pres)
-    pre_text = "\n\n".join(pres) if pres else None
-
+    """``htmlelements.walk_document`` plus the section parse: an empty
+    ``<title>`` stays ``""`` here (``extract_document`` gives None)."""
+    doc, pruned = walk_document(raw, default_lang)
+    title, text, pre_text = doc["title"], doc["text"], doc["pre_text"]
     if pre_text and len(pre_text) > 0.5 * max(len(text), 1):
         # predominantly preformatted -> RFC-style text document
         # (compositerepository.py:182-251 "try parsers in order" shape)
@@ -46,36 +30,7 @@ def parse_page(raw: bytes, default_lang: str = "en") -> dict:
         preamble, sections = (parse_html_sections(pruned)
                               if pruned is not None else ("", []))
     return {
-        "title": title, "lang": lang, "text": text, "links": links,
-        "kind": kind, "preamble": preamble, "sections": sections,
+        "title": title, "lang": doc["lang"], "text": text,
+        "links": doc["links"], "kind": kind, "preamble": preamble,
+        "sections": sections,
     }
-
-
-def _collect_links(node, out, seen):
-    if node is None or isinstance(node, str):
-        return
-    if node.tag == "a" and "href" in node.attrs:
-        v = node.attrs["href"]
-        if v not in seen:
-            seen.add(v)
-            out.append(v)
-    for c in node.children:
-        _collect_links(c, out, seen)
-
-
-def _collect_pre(node, out):
-    if isinstance(node, str):
-        return
-    if node.tag == "pre":
-        out.append("".join(_raw(node)))
-        return
-    for c in node.children:
-        _collect_pre(c, out)
-
-
-def _raw(node):
-    for c in node.children:
-        if isinstance(c, str):
-            yield c
-        else:
-            yield from _raw(c)

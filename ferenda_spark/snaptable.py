@@ -499,9 +499,8 @@ class SnapshotTable:
         other rows survive.  Only data units whose recorded bounds on
         ``key_cols[0]`` overlap the incoming key range are rewritten;
         every other unit is carried forward by reference — the on-disk
-        bytes of untouched files never move (catalog.merge_upsert is
-        the non-versioned flavor; this is the Iceberg MERGE INTO
-        shape the docstring there points at)."""
+        bytes of untouched files never move (the Iceberg MERGE INTO
+        shape)."""
         meta = self._load()
         snap = self._current_snap(meta)
         keys = list(key_cols)

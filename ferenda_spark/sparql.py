@@ -88,13 +88,14 @@ reference's own integration-test queries and expected results
 annotation query res/sparql/annotations.rq (``dcterms:isPartOf*`` —
 tests/test_sparql.py golden).
 
-Property paths compile to distributed fixpoints: a constant endpoint
-becomes a broadcast-frontier BFS over the ``pred``-filtered edge scan
-(O(diameter) rounds, each one shuffle join, lineage cut per round);
-var-var paths build the transitive-closure pair set semi-naively —
-correct for the bounded-diameter part/annotation hierarchies the
-reference queries (annotations.rq), quadratic in the worst case and
-documented as such.  Aggregates compile to ``groupBy().agg()`` —
+Property paths compile to the one reachability fixpoint,
+``operators.graphs.reach`` (a frontier BFS over the ``pred``-filtered
+edge scan: diameter + 1 rounds, each one shuffle join plus one
+anti-join, lineage cut per round).  A constant endpoint seeds it with
+its one-hop neighbours; var-var paths seed it with every edge and
+label the walk by its subject, which gives the transitive-closure
+pair set — quadratic in the worst case, bounded by
+``PATH_PAIR_BUDGET``.  Aggregates compile to ``groupBy().agg()`` —
 map-side partial aggregation, one shuffle (COUNT per
 triplestore.py:653-666, GROUP BY per triplestore.py:138-173
 passthrough semantics).
@@ -137,6 +138,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, functions as F
+
+from .operators.graphs import ReachBudgetExceeded, reach
 
 
 class SparqlError(ValueError):
@@ -1173,15 +1176,11 @@ def _scan(triples: DataFrame, pattern, ctx=None,
     return df.select(*cols)
 
 
-# fixpoint bound for property paths: part/annotation hierarchies are
-# shallow (SURVEY.md J3); a graph needing more rounds than this is not
-# the shape the reference queries, so fail loudly instead of looping
-_MAX_PATH_ITER = 32
 # Budget on materialized (subj, obj) closure pairs for var-var paths:
 # the closure is worst-case quadratic in reachable nodes, so an
 # adversarial deep/dense graph could otherwise grow the fixpoint
-# unboundedly before the iteration cap bites.  Crossing the budget
-# raises SparqlError instead of running away; callers with genuinely
+# until memory runs out.  Crossing the budget raises SparqlError
+# while the fixpoint is still running; callers with genuinely
 # huge-but-intended closures can raise it (module attribute).
 PATH_PAIR_BUDGET = 5_000_000
 
@@ -1223,73 +1222,38 @@ def _path_edges(triples: DataFrame, p, ctx, ctx_var=None) -> DataFrame:
 
 
 def _path_reach(edges: DataFrame, start: str, forward: bool) -> DataFrame:
-    """Nodes reachable from ``start`` over >= 1 edge (the ``+`` set;
-    ``*`` adds {start} back).  Broadcast-frontier BFS: the frontier is
-    small relative to the edge table, so each round is one broadcast
-    join + anti-join, O(diameter) rounds, lineage cut per round."""
+    """Nodes ``n`` reachable from ``start`` over >= 1 edge (the ``+``
+    set; ``*`` adds {start} back): one :func:`reach` seeded with the
+    start's one-hop neighbours.  Under GRAPH ?var ``__pctx`` is both
+    label and key, so each walk stays inside its named graph."""
     here, there = ("subj", "obj") if forward else ("obj", "subj")
-    ctxed = "__pctx" in edges.columns
-    keep = [edges[there].alias("n")] + (
-        [edges["__pctx"]] if ctxed else [])
-    spark = edges.sparkSession
-    start_df = spark.createDataFrame([(start,)], "n string")
-    reach = (edges.join(F.broadcast(start_df),
-                        edges[here] == start_df["n"])
-             .select(*keep).distinct()
-             .localCheckpoint())
-    prev = reach.count()
-    for _ in range(_MAX_PATH_ITER):
-        if prev == 0:
-            return reach
-        cond = edges[here] == reach["n"]
-        if ctxed:
-            cond = cond & (edges["__pctx"] == reach["__pctx"])
-        step = edges.join(F.broadcast(reach), cond).select(*keep)
-        reach = reach.unionByName(step).distinct().localCheckpoint()
-        cur = reach.count()
-        if cur == prev:
-            return reach
-        prev = cur
-    raise SparqlError("property path exceeded %d iterations"
-                      % _MAX_PATH_ITER)
+    ctx = ["__pctx"] if "__pctx" in edges.columns else []
+    e = edges.select(F.col(here).alias("u"), F.col(there).alias("v"), *ctx)
+    seeds = (e.where(F.col("u") == start)
+             .select(*ctx, F.col("v").alias("node"), F.lit(1).alias("dist"))
+             .distinct())
+    return reach(e, seeds).select(F.col("node").alias("n"), *ctx)
 
 
 def _closure_pairs(edges: DataFrame) -> DataFrame:
-    """Transitive-closure (subj, obj) pairs (>= 1 edge): fixpoint of
-    closure ∘ edges with count-based convergence — the same loop shape
-    as graphs.ispartof_closure (one shuffle join + one distinct per
-    round, lineage cut per round).  Worst case quadratic in reachable
-    pairs — correct and cheap for the bounded-diameter hierarchies the
-    reference's path queries walk.  (An anti-join semi-naive delta
-    would re-shuffle less per round, but Spark 4.1's union constraint
-    rewrite miscompiles the anti-join-into-self-union cycle —
-    NoSuchElementException on attribute ids — so the fixpoint is
-    expressed the proven way.)"""
-    ctxed = "__pctx" in edges.columns
-    paths = edges
-    prev = paths.count()
-    for _ in range(_MAX_PATH_ITER):
-        cond = F.col("c.obj") == F.col("e.subj")
-        if ctxed:
-            cond = cond & (F.col("c.__pctx") == F.col("e.__pctx"))
-        sel = [F.col("c.subj").alias("subj"),
-               F.col("e.obj").alias("obj")] + (
-            [F.col("c.__pctx").alias("__pctx")] if ctxed else [])
-        step = (paths.alias("c")
-                .join(edges.alias("e"), cond)
-                .select(*sel))
-        paths = (paths.unionByName(step).distinct().localCheckpoint())
-        cur = paths.count()
-        if cur == prev:
-            return paths
-        if cur > PATH_PAIR_BUDGET:
-            raise SparqlError(
-                "property-path closure exceeded the %d-pair budget "
-                "(%d pairs so far); narrow the path or raise "
-                "sparql.PATH_PAIR_BUDGET" % (PATH_PAIR_BUDGET, cur))
-        prev = cur
-    raise SparqlError("property path exceeded %d iterations"
-                      % _MAX_PATH_ITER)
+    """Transitive-closure (subj, obj) pairs (>= 1 edge): one
+    :func:`reach` seeded with the edges at dist 1, ``subj`` the label
+    (plus ``__pctx`` as label and key under GRAPH ?var).  Worst case
+    quadratic in reachable pairs — cheap for the bounded-diameter
+    hierarchies the reference's path queries walk; past
+    ``PATH_PAIR_BUDGET`` pairs it raises SparqlError."""
+    ctx = ["__pctx"] if "__pctx" in edges.columns else []
+    e = edges.select(F.col("subj").alias("u"), F.col("obj").alias("v"), *ctx)
+    seeds = edges.select("subj", *ctx, F.col("obj").alias("node"),
+                         F.lit(1).alias("dist"))
+    try:
+        pairs = reach(e, seeds, budget=PATH_PAIR_BUDGET)
+    except ReachBudgetExceeded as exc:
+        raise SparqlError(
+            "property-path closure exceeded the %d-pair budget "
+            "(%d pairs so far); narrow the path or raise "
+            "sparql.PATH_PAIR_BUDGET" % exc.args) from None
+    return pairs.select("subj", F.col("node").alias("obj"), *ctx)
 
 
 def _path_scan(triples: DataFrame, payload, ctx=None,
@@ -1356,20 +1320,20 @@ def _path_scan(triples: DataFrame, payload, ctx=None,
             here, there = ("subj", "obj") if forward else ("obj", "subj")
             keep = [edges[there].alias("n")] + (
                 [edges["__pctx"]] if ctx_var is not None else [])
-            reach = (edges.join(F.broadcast(start_df),
-                                edges[here] == start_df["n"])
-                     .select(*keep).distinct())
+            reached = (edges.join(F.broadcast(start_df),
+                                  edges[here] == start_df["n"])
+                       .select(*keep).distinct())
         else:
-            reach = _path_reach(edges, start, forward)
+            reached = _path_reach(edges, start, forward)
         if mod in ("*", "?"):
             if ctx_var is not None:
                 zero = (all_ctx()
                         .select(F.lit(start).alias("n"), "__pctx"))
-                reach = reach.unionByName(zero).distinct()
+                reached = reached.unionByName(zero).distinct()
             else:
-                reach = (reach.unionByName(start_df.select("n"))
-                         .distinct())
-        return reach.select(F.col("n").alias(var), *ctx_cols)
+                reached = (reached.unionByName(start_df.select("n"))
+                           .distinct())
+        return reached.select(F.col("n").alias(var), *ctx_cols)
     # both constant
     if ctx_var is not None:
         # GRAPH ?g { <s> p+ <o> }: bind ?g to the graphs where the
@@ -1381,8 +1345,8 @@ def _path_scan(triples: DataFrame, payload, ctx=None,
                                 & (F.col("obj") == o.value))
                     .select("__pctx").distinct())
         else:
-            reach = _path_reach(edges, s.value, forward=True)
-            hits = (reach.where(F.col("n") == o.value)
+            reached = _path_reach(edges, s.value, forward=True)
+            hits = (reached.where(F.col("n") == o.value)
                     .select("__pctx").distinct())
         return hits.select(F.col("__pctx").alias(ctx_var))
     # existence check -> 0/1-row marker frame
@@ -1393,8 +1357,8 @@ def _path_scan(triples: DataFrame, payload, ctx=None,
                            & (F.col("obj") == o.value))
                .limit(1).count() > 0)
     else:
-        reach = _path_reach(edges, s.value, forward=True)
-        hit = reach.where(F.col("n") == o.value).limit(1).count() > 0
+        reached = _path_reach(edges, s.value, forward=True)
+        hit = reached.where(F.col("n") == o.value).limit(1).count() > 0
     return (edges.sparkSession.range(1 if hit else 0)
             .select(F.lit(1).alias("__exists")))
 

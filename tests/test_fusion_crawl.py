@@ -282,11 +282,17 @@ def test_sitemap_parses_namespaced_and_sparse_entries(spark):
            b'<priority>0.7</priority></url>'
            b'<url><loc> https://a/2 </loc></url>'   # no lastmod/priority
            b'<url><lastmod>2024-01-03</lastmod></url>'  # no loc: skipped
+           b'<url><loc>https://a/3</loc><priority>1.0</priority></url>'
+           # not a number in [0, 1]: NULL priority, entry kept
+           b'<url><loc>https://a/4</loc><priority>high</priority></url>'
+           b'<url><loc>https://a/5</loc><priority>1.5</priority></url>'
            b'</urlset>')
     df = spark.createDataFrame([(xml,)], "xml binary")
     got = sorted(sitemap_entries(df).collect(), key=lambda r: r.loc)
     assert [(r.loc, r.lastmod, r.priority_tenths) for r in got] == [
-        ("https://a/1", "2024-01-02", 7), ("https://a/2", None, None)]
+        ("https://a/1", "2024-01-02", 7), ("https://a/2", None, None),
+        ("https://a/3", None, 10), ("https://a/4", None, None),
+        ("https://a/5", None, None)]
 
 
 def test_sitemap_malformed_or_non_utf8_file_yields_no_rows(spark):

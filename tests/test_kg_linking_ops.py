@@ -80,7 +80,7 @@ def test_transitive_reduction_cycle_drops_cycle_edges(spark):
     edges = spark.createDataFrame([(1, 2), (2, 1), (5, 6)],
                                   "doc_a long, doc_b long")
     got = sorted((r.doc_a, r.doc_b) for r in
-                 transitive_reduction(edges, max_depth=4).collect())
+                 transitive_reduction(edges).collect())
     assert got == [(5, 6)]
 
 

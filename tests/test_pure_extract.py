@@ -78,6 +78,19 @@ def test_extract_document_metadata():
     assert doc["links"] == ["u1", "u2"]  # deduped, document order
 
 
+def test_parse_page_shares_extract_document_walk():
+    """The parse stage and extract_document read the same walk; they
+    differ only on an empty <title> ("" vs None)."""
+    from ferenda_spark.parsepage import parse_page
+    raw = (b'<html lang="sv"><head><title> </title></head><body>'
+           b'<p>x</p><a href="u1">l</a><a href="u1">l</a></body></html>')
+    doc, page = extract_document(raw), parse_page(raw)
+    assert (doc["title"], page["title"]) == (None, "")
+    for k in ("text", "lang", "links"):
+        assert page[k] == doc[k]
+    assert parse_page(b"<html><body>x</body></html>")["title"] is None
+
+
 def test_lang_fallback():
     assert extract_document(b"<html><body>x</body></html>",
                             default_lang="de")["lang"] == "de"

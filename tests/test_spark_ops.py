@@ -530,10 +530,9 @@ def test_legal_mentions_distributed(spark):
     }
 
 
-def test_catalog_triples_roundtrip_and_merge(spark, tmpdir):
+def test_catalog_triples_roundtrip(spark, tmpdir):
     """S6 partitioned triple sink roundtrips and writes one file per
-    bucket whatever the upstream partitioning; S2/I5 merge keeps
-    unmatched keys and replaces matched ones."""
+    bucket whatever the upstream partitioning."""
     import os
     from ferenda_spark import catalog
     t = spark.createDataFrame(
@@ -551,16 +550,6 @@ def test_catalog_triples_roundtrip_and_merge(spark, tmpdir):
                  if f.endswith(".parquet")] for d in buckets}
     assert all(len(fs) == 1 for fs in files.values()), files
     assert sum(len(fs) for fs in files.values()) <= catalog.N_BUCKETS
-
-    base = spark.createDataFrame([("u1", 1), ("u2", 1)],
-                                 "url string, v int")
-    catalog.write_stage(base, tmpdir, "entries")
-    newer = spark.createDataFrame([("u2", 2), ("u3", 2)],
-                                  "url string, v int")
-    merged = catalog.merge_upsert(spark, tmpdir, "entries", newer,
-                                  ("url",))
-    got = {(r.url, r.v) for r in merged.collect()}
-    assert got == {("u1", 1), ("u2", 2), ("u3", 2)}
 
 
 def test_connected_components_arbitrary_uris(spark):
@@ -686,21 +675,6 @@ def test_dump_nt_multifile_sorted_with_manifest(spark, tmpdir):
     ordered = sorted(manifest, key=lambda m: m["file"])
     for a, b in zip(ordered, ordered[1:]):
         assert a["max_line"] <= b["min_line"]
-
-
-def test_merge_upsert_propagates_read_errors(spark, tmpdir):
-    """A corrupt existing table must raise, not silently degrade MERGE
-    to full-replace (ADVICE r1)."""
-    import os
-    import pytest as _pytest
-    from ferenda_spark import catalog
-    os.makedirs(tmpdir + "/broken")
-    with open(tmpdir + "/broken/part-00000.parquet", "w") as fh:
-        fh.write("this is not parquet")
-    new = spark.createDataFrame([("u1", 1)], "url string, v int")
-    with _pytest.raises(Exception):
-        catalog.merge_upsert(spark, tmpdir, "broken", new,
-                             ("url",)).collect()
 
 
 def test_catalog_nt_dump_format(spark, tmpdir):

@@ -138,8 +138,8 @@ def _facts(spark, rows):
 
 
 def test_owl_transitive_deep_chain(spark):
-    """A 5-link chain closes to all 15 ancestor pairs (doubling
-    rounds: 5 links need 3 rounds, under max_iter)."""
+    """A 5-link chain closes to all 15 ancestor pairs (one hop per
+    round, to the first empty round)."""
     from ferenda_spark.operators.graphs import (OWL, OWL_TRANSITIVE,
                                                 owl_entailment)
     from ferenda_spark import vocab
