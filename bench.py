@@ -242,6 +242,7 @@ def main() -> int:
         return 0
 
     import __spark_entry__ as entry
+    from ferenda_spark.registry.common import _docs
     from ferenda_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
@@ -261,7 +262,7 @@ def main() -> int:
     # parsed-docs cache exactly as a long-lived cluster would hold the
     # parsed stage table; the KG queries then time their own plans.
     t0 = time.time()
-    docs_df = entry._docs(spark, args.sf)
+    docs_df = _docs(spark, args.sf)
     docs_df.count()
     parse_s = time.time() - t0
 

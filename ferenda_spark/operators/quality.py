@@ -1023,8 +1023,7 @@ def srm_check(assignments: DataFrame, expected_a_permille: int = 500,
 def wilson_domain_ranking(documents: DataFrame,
                           flag_col: str = "passed",
                           group_col: str = "source",
-                          z_milli: int = 1960,
-                          round_to: int = 6) -> DataFrame:
+                          z_milli: int = 1960) -> DataFrame:
     """Per-group pass-rate ranking by the Wilson score lower bound
     (Wilson 1927; the "how not to sort by average rating" fix): a
     domain with 3/3 pages passing must NOT outrank one with 95/100 —
@@ -1038,12 +1037,13 @@ def wilson_domain_ranking(documents: DataFrame,
 
     Counts stay exact longs; the bound is ONE pinned IEEE expression
     (z = z_milli/1000, default 1.96 — the 95% bound) evaluated
-    identically by any engine, rounded once at the end (the
-    mann_whitney convention).
+    identically by any engine, floor-scaled to micro once at the end
+    (floor of a bit-identical double is engine-exact; round(x, 6) at
+    a tie is not: Spark HALF_UPs where DuckDB goes to even).
 
     Scale shape: one group aggregate (map-side combined), then
     dimension-sized arithmetic.  Returns (group, n, n_pass,
-    wilson_lb) ordered nowhere — callers sort by the bound."""
+    wilson_lb_micro) ordered nowhere — callers sort by the bound."""
     g = (documents.groupBy(F.col(group_col).alias("group"))
          .agg(F.count(F.lit(1)).cast("long").alias("n"),
               F.sum(F.col(flag_col).cast("long")).cast("long")
@@ -1057,4 +1057,5 @@ def wilson_domain_ranking(documents: DataFrame,
                         / n))
           / (F.lit(1.0) + z2 / n))
     return g.select("group", "n", "n_pass",
-                    F.round(lb, round_to).alias("wilson_lb"))
+                    F.floor(lb * 1000000).cast("long")
+                    .alias("wilson_lb_micro"))

@@ -552,10 +552,13 @@ def rake_keyphrases(documents: DataFrame, text_col: str = "text",
             .where(F.col("rank") <= int(top_k)))
 
 
-def _ols_fit(pts: DataFrame, group_cols: list, round_to: int = 6):
+def _ols_fit(pts: DataFrame, group_cols: list):
     """Grouped closed-form least squares of y on x over (x, y) rows:
     slope/intercept/r2 from the five moment sums — one aggregate, no
-    iteration."""
+    iteration.  Outputs are floor-scaled micro longs (the
+    events.theil_sen_trend convention): round(x, 6) is not
+    engine-exact, since Spark HALF_UPs a tie and keeps 0.0 where
+    DuckDB gives -0.0."""
     agg = (pts.groupBy(*group_cols)
            .agg(F.count(F.lit(1)).cast("long").alias("n_fit"),
                 F.sum("x").alias("sx"), F.sum("y").alias("sy"),
@@ -571,13 +574,13 @@ def _ols_fit(pts: DataFrame, group_cols: list, round_to: int = 6):
     r2 = (vxy * vxy) / (vxx * vyy)
     return agg.select(
         *group_cols, "n_fit",
-        F.round(slope, round_to).alias("slope"),
-        F.round(intercept, round_to).alias("intercept"),
-        F.round(r2, round_to).alias("r2"))
+        F.floor(slope * 1000000).cast("long").alias("slope_micro"),
+        F.floor(intercept * 1000000).cast("long").alias("intercept_micro"),
+        F.floor(r2 * 1000000).cast("long").alias("r2_micro"))
 
 
 def zipf_fit(documents: DataFrame, top_n: int = 100,
-             min_count: int = 2, round_to: int = 6) -> DataFrame:
+             min_count: int = 2) -> DataFrame:
     """Per-language Zipf's-law fit: token frequencies ranked within
     each language (ties to the lexicographically first token), then
     OLS of ln(freq) on ln(rank) over the top ``top_n`` ranks with
@@ -592,7 +595,8 @@ def zipf_fit(documents: DataFrame, top_n: int = 100,
     the logs; the fit is a closed-form moment aggregate
     (:func:`_ols_fit`), no iteration.
 
-    Returns (lang, n_fit, slope, intercept, r2, top_token)."""
+    Returns (lang, n_fit, slope_micro, intercept_micro, r2_micro,
+    top_token)."""
     toks = (documents
             .select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
             .where(F.length("tok") > 0))
@@ -606,13 +610,13 @@ def zipf_fit(documents: DataFrame, top_n: int = 100,
         "lang", "tok", "rank",
         F.log(F.col("rank").cast("double")).alias("x"),
         F.log(F.col("cnt").cast("double")).alias("y"))
-    fit = _ols_fit(pts, ["lang"], round_to)
+    fit = _ols_fit(pts, ["lang"])
     top = (ranked.where(F.col("rank") == 1)
            .select("lang", F.col("tok").alias("top_token")))
     return fit.join(top, "lang")
 
 
-def heaps_fit(documents: DataFrame, round_to: int = 6) -> DataFrame:
+def heaps_fit(documents: DataFrame) -> DataFrame:
     """Per-source Heaps'-law fit V(n) = K * n^beta: for each source,
     walk the corpus in doc_id order, record (cumulative tokens seen,
     cumulative distinct vocabulary) after every document, and OLS-fit
@@ -627,8 +631,9 @@ def heaps_fit(documents: DataFrame, round_to: int = 6) -> DataFrame:
     (corpus-sized work is the one token groupBy; the windows run on
     #docs rows partitioned by source).
 
-    Returns (source, n_docs, n_fit, slope, intercept, r2) where slope
-    is the Heaps exponent beta and exp(intercept) is K."""
+    Returns (source, n_docs, n_fit, slope_micro, intercept_micro,
+    r2_micro) where slope is the Heaps exponent beta and exp(intercept)
+    is K."""
     toks = (documents
             .select("source", "doc_id",
                     F.explode(tokens(F.col("text"))).alias("tok"))
@@ -654,7 +659,7 @@ def heaps_fit(documents: DataFrame, round_to: int = 6) -> DataFrame:
         F.log(F.col("cum_types").cast("double")).alias("y"))
     n_docs = (per_doc.groupBy("source")
               .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
-    return _ols_fit(pts, ["source"], round_to).join(n_docs, "source")
+    return _ols_fit(pts, ["source"]).join(n_docs, "source")
 
 
 def textrank_keywords(documents: DataFrame, window: int = 2,

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import catalog
 from .operators.canonicalize import rewrite_canonical, sameas_components
 from .operators.extract import extract_pages
-from .operators.incremental import run_stage_atomic
+from .operators.incremental import fingerprinted, run_stage_atomic
 from .operators.linking import build_resources, entity_mention_triples
 from .operators.triples import TRIPLE_COLS, all_triples, with_doc_metadata
 
@@ -59,7 +59,9 @@ def flagship(spark: SparkSession, pages: DataFrame,
     whose bytes changed, a kill loses at most the uncommitted batch of
     one stage, and every triple row of ``triples_snap`` keeps the
     ``(url, input_fingerprint)`` of the page that produced it.  The
-    canonical graph is rebuilt from the committed triples, written with
+    canonical graph is rebuilt from the committed rows of the current
+    ``pages`` (a changed, deleted or reverted page leaves no stale
+    triples, so it equals the graph of a fresh run), written with
     :func:`catalog.write_triples` to ``<store>/triples``, and read
     back."""
     if store is None:
@@ -70,7 +72,15 @@ def flagship(spark: SparkSession, pages: DataFrame,
         return parsed_docs(todo).join(
             todo.select("url", "input_fingerprint"), "url")
 
+    # a stage table holds every committed version of every url: the
+    # graph is built from the rows of the current input only
+    def live(stage_out, stage_in, source_col="html"):
+        keys = ["url", "input_fingerprint"]
+        return stage_out.join(fingerprinted(stage_in, source_col)
+                              .select(*keys), keys, "left_semi")
+
     parsed, _, _ = run_stage_atomic(pages, store, "parse", parse_t)
+    parsed = live(parsed, pages)
 
     def triples_t(todo):
         lineage = todo.select(F.col("url").alias("context"), "url",
@@ -82,7 +92,7 @@ def flagship(spark: SparkSession, pages: DataFrame,
     # pending (and re-committed) on every rerun
     triples, _, _ = run_stage_atomic(parsed, store, "triples", triples_t,
                                      source_col="input_fingerprint")
-    t = triples.select(*TRIPLE_COLS)
+    t = live(triples, parsed, "input_fingerprint").select(*TRIPLE_COLS)
     catalog.write_triples(rewrite_canonical(t, sameas_components(t)),
                           store)
     return (catalog.read_stage(spark, store, "triples")

@@ -140,19 +140,14 @@ def test_flagship_store_rerun_is_noop(spark, tmpdir):
 def test_flagship_staging_keeps_the_graph(spark, tmpdir):
     """The in-memory and the store-backed flagship build the same
     graph as the oracle-checked kg_canonical_triples query."""
-    import importlib.util
-
     from ferenda_spark.corpus import load_pages
     from ferenda_spark.operators.triples import TRIPLE_COLS
     from ferenda_spark.pipeline import flagship
+    from ferenda_spark.registry import QUERIES
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(repo, "__spark_entry__.py"))
-    entry = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(entry)
     sf = "/root/testdata/sf0.001"
-    want = (entry.queries()["kg_canonical_triples"](spark, sf)
+    canonical_triples, _ = QUERIES["kg_canonical_triples"]
+    want = (canonical_triples(spark, sf)
             .select(*TRIPLE_COLS).localCheckpoint())
     n = want.count()
     assert n > 0
@@ -162,3 +157,42 @@ def test_flagship_staging_keeps_the_graph(spark, tmpdir):
         assert got.count() == n
         assert got.exceptAll(want).count() == 0
         assert want.exceptAll(got).count() == 0
+
+
+def test_staged_flagship_equals_fresh_under_change_and_delete(spark,
+                                                               tmpdir):
+    """One store, five batches of a 12-page slice: v1, a changed
+    <title>, a removed sameAs sentence (splits a sameAs component), a
+    deleted page, and a revert to v1.  After every batch the staged
+    flagship builds exactly the graph a fresh flagship builds from the
+    same pages: no triple of a superseded or deleted version stays."""
+    from ferenda_spark.corpus import PAGES_SCHEMA, pages_from_documents
+    from ferenda_spark.operators.triples import TRIPLE_COLS
+    from ferenda_spark.pipeline import flagship
+
+    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+            .where(F.col("doc_id") < 12))
+    v1 = [r.asDict() for r in pages_from_documents(docs).collect()]
+    assert len(v1) == 12
+
+    def edit(rows, doc_id, old, new):
+        out = []
+        for r in rows:
+            if r["url"].endswith("/%d" % doc_id):
+                assert old in r["html"]
+                r = dict(r, html=bytes(r["html"]).replace(old, new))
+            out.append(r)
+        return out
+
+    retitled = edit(v1, 3, b"<title>Document 3</title>",
+                    b"<title>Document 3, revised</title>")
+    unlinked = edit(retitled, 10, b"Identical to Document 9.", b"")
+    deleted = [r for r in unlinked if not r["url"].endswith("/3")]
+    for rows in (v1, retitled, unlinked, deleted, v1):
+        pages = spark.createDataFrame(rows, PAGES_SCHEMA)
+        staged = (flagship(spark, pages, tmpdir).select(*TRIPLE_COLS)
+                  .localCheckpoint())
+        fresh = flagship(spark, pages).select(*TRIPLE_COLS).localCheckpoint()
+        assert staged.count() == fresh.count()
+        assert staged.exceptAll(fresh).count() == 0
+        assert fresh.exceptAll(staged).count() == 0

@@ -6,10 +6,10 @@ REAL query over the sf0.001 parquet."""
 
 import contextlib
 import io
-import os
 
 import pytest
 
+from ferenda_spark.registry import QUERIES
 from ferenda_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -24,13 +24,7 @@ def spark():
 
 @pytest.fixture(scope="module")
 def queries():
-    import importlib.util
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(repo, "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.queries()
+    return {name: fn for name, (fn, _) in QUERIES.items()}
 
 
 def _plan(df) -> str:
@@ -306,17 +300,7 @@ BNLJ_ALLOWED = frozenset({
 })
 
 
-def _sweep_params():
-    import importlib.util
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "entry_sweep", os.path.join(repo, "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return sorted(mod.queries())
-
-
-@pytest.mark.parametrize("qname", _sweep_params())
+@pytest.mark.parametrize("qname", sorted(QUERIES))
 def test_sweep_no_cartesian_no_unsanctioned_bnlj(spark, queries, qname):
     """Global scale-killer sweep (r4 verdict ask): EVERY registered
     query's physical plan must be free of CartesianProduct, and any

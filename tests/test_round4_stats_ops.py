@@ -202,9 +202,9 @@ def test_zipf_fit_exact_power_law_gives_slope_minus_one(spark):
     assert len(out) == 1
     r = out[0]
     assert r.n_fit == 6
-    assert r.slope == pytest.approx(-1.0, abs=1e-6)
-    assert r.intercept == pytest.approx(math.log(720.0), abs=1e-6)
-    assert r.r2 == pytest.approx(1.0, abs=1e-6)
+    assert r.slope_micro == pytest.approx(-1e6, abs=1)
+    assert r.intercept_micro == pytest.approx(math.log(720.0) * 1e6, abs=1)
+    assert r.r2_micro == pytest.approx(1e6, abs=1)
     assert r.top_token == "aa"
 
 
@@ -249,9 +249,9 @@ def test_heaps_fit_matches_python_replay(spark):
     r = out[0]
     assert r.n_docs == 4
     assert r.n_fit == 4
-    assert r.slope == pytest.approx(slope, abs=1e-6)
-    assert r.intercept == pytest.approx(intercept, abs=1e-6)
-    assert r.r2 == pytest.approx(r2, abs=1e-6)
+    assert r.slope_micro == pytest.approx(slope * 1e6, abs=1)
+    assert r.intercept_micro == pytest.approx(intercept * 1e6, abs=1)
+    assert r.r2_micro == pytest.approx(r2 * 1e6, abs=1)
 
 
 # ------------------------------------------------- KS / MWU / ACF / Sen

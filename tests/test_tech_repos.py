@@ -385,10 +385,10 @@ def test_wilson_small_sample_cannot_outrank_large(spark):
         docs, group_col="source").collect()}
     # 3/3 = 100% raw, but its Wilson LB must sit BELOW 95/100's
     assert out["tiny"].n_pass == 3 and out["big"].n_pass == 95
-    assert out["tiny"].wilson_lb < out["big"].wilson_lb
+    assert out["tiny"].wilson_lb_micro < out["big"].wilson_lb_micro
     # bounds live strictly inside (0, p-hat)
     for r in out.values():
-        assert 0 < r.wilson_lb < r.n_pass / r.n
+        assert 0 < r.wilson_lb_micro < r.n_pass / r.n * 1e6
 
 
 def test_wilson_zero_and_full_rates_bounded(spark):
@@ -398,5 +398,5 @@ def test_wilson_zero_and_full_rates_bounded(spark):
         "source string, passed boolean")
     out = {r.group: r for r in wilson_domain_ranking(
         docs, group_col="source").collect()}
-    assert out["none"].wilson_lb == 0.0
-    assert 0.65 < out["all"].wilson_lb < 1.0
+    assert out["none"].wilson_lb_micro == 0
+    assert 650000 < out["all"].wilson_lb_micro < 1000000
