@@ -1,14 +1,12 @@
-"""Stage-table catalog: partitioned parquet tables with the layout
-and semantics the production deployment gets from Iceberg (SURVEY.md
-S3/S5/S6/S7, X9/X11).
+"""Triple sink and whole-dataset exports (SURVEY.md S6/S7, X9/X11).
 
-Every pipeline stage writes its output through here: the triples sink
-partitions by a bounded hash bucket of the document context (the
-sandbox stand-in for Iceberg's url-prefix/warc_ts partition spec —
-bounded cardinality, balanced, prunable on equality), writes are
+``write_triples`` is the triple sink (S6): one unpartitioned parquet
+directory at ``<store>/triples``, rows hash-clustered on the document
+context so each per-document graph lands in one file.  It is
 atomic-by-replace (S5's write-if-different idempotence comes from the
-outputs being deterministic functions of inputs; the conditional-ingest
-MERGE, S2/I5, is ``snaptable.SnapshotTable.merge``), and ``dump_nt`` is the
+outputs being deterministic functions of inputs; the resumable,
+snapshot-versioned stage tables and the conditional-ingest MERGE,
+S2/I5, are ``snaptable.SnapshotTable``).  ``dump_nt`` is the
 whole-dataset N-Triples dump (S7, relate_all_teardown
 documentrepository.py:1787-1806) with a stable sort for byte-stable
 output (O3).
@@ -18,47 +16,22 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-N_BUCKETS = 64  # production: Iceberg `bucket(N, url)` / days(warc_ts)
+from pyspark.sql import DataFrame, functions as F
 
 
-def stage_path(store_dir: str, table: str) -> str:
-    return os.path.join(store_dir, table)
+def write_triples(triples: DataFrame, store_dir: str) -> str:
+    """The triple sink (S6): overwrite ``<store_dir>/triples`` as one
+    flat parquet directory and return its path.
 
-
-def write_stage(df: DataFrame, store_dir: str, table: str,
-                partition_by: tuple = (), mode: str = "overwrite") -> str:
-    """Write a stage table (optionally partitioned); returns its path."""
-    path = stage_path(store_dir, table)
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    Rows are hash-repartitioned on ``context`` first, so each
+    document's graph is written by one task into one file, and the
+    file count follows the data (AQE coalesces the shuffle, at most
+    ``spark.sql.shuffle.partitions`` files) rather than the upstream
+    partitioning.  With no partition directories, a reader lists one
+    directory and starts no file-listing job."""
+    path = os.path.join(store_dir, "triples")
+    triples.repartition("context").write.mode("overwrite").parquet(path)
     return path
-
-
-def read_stage(spark: SparkSession, store_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(stage_path(store_dir, table))
-
-
-def write_triples(triples: DataFrame, store_dir: str,
-                  table: str = "triples",
-                  mode: str = "overwrite") -> str:
-    """The triple sink (S6): partition by a bounded hash bucket of the
-    named-graph context so per-document graphs stay co-located and the
-    partition count is independent of corpus size.
-
-    Rows are hash-repartitioned on the bucket before the partitioned
-    write, so each bucket is written by exactly one task: the sink
-    holds at most ``N_BUCKETS`` files (one per ``context_bucket=*``
-    directory) whatever the upstream partitioning."""
-    bucketed = (triples
-                .withColumn("context_bucket",
-                            F.abs(F.hash("context")) % N_BUCKETS)
-                .repartition("context_bucket"))
-    return write_stage(bucketed, store_dir, table,
-                       partition_by=("context_bucket",), mode=mode)
 
 
 def _nt_escape(s):

@@ -23,7 +23,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from .. import vocab
 
@@ -31,6 +31,15 @@ from .. import vocab
 class ReachBudgetExceeded(RuntimeError):
     """:func:`reach` visited more rows than its ``budget``; ``args``
     is (budget, rows visited so far)."""
+
+
+def _checkpoint_count(df: DataFrame) -> tuple:
+    """(``df`` checkpointed, its row count) from one Spark action: the
+    count is observed while the eager checkpoint computes the rows."""
+    obs = Observation()
+    out = (df.observe(obs, F.count(F.lit(1)).alias("n"))
+           .localCheckpoint(eager=True))
+    return out, obs.get["n"]
 
 
 def reach(edges: DataFrame, frontier: DataFrame,
@@ -51,11 +60,13 @@ def reach(edges: DataFrame, frontier: DataFrame,
     layering makes ``dist`` that plus the shortest hop count from the
     seeds.  Labels and keys compare null-safe.
 
-    A round is one eager ``localCheckpoint`` and one ``count``.  The
-    checkpoint cuts lineage, and it makes every round's frame a fresh
-    leaf, so the visited anti-join never reads a union built from its
-    own output: the shape Spark 4.1's union constraint rewrite
-    miscompiles (NoSuchElementException on attribute ids).
+    A round is one Spark action: an eager ``localCheckpoint`` whose
+    row count is observed while it runs (:func:`_checkpoint_count`),
+    not a checkpoint followed by a ``count``.  The checkpoint cuts
+    lineage, and it makes every round's frame a fresh leaf, so the
+    visited anti-join never reads a union built from its own output:
+    the shape Spark 4.1's union constraint rewrite miscompiles
+    (NoSuchElementException on attribute ids).
     ``budget`` bounds the visited rows while the fixpoint runs (the
     SPARQL closure pair budget): past it, :class:`ReachBudgetExceeded`
     is raised."""
@@ -70,8 +81,12 @@ def reach(edges: DataFrame, frontier: DataFrame,
         eq = F.col("n." + c).eqNullSafe(F.col("s." + c))
         seen_on = eq if seen_on is None else seen_on & eq
     edges = edges.localCheckpoint(eager=False).alias("e")
-    front = visited = frontier.localCheckpoint(eager=False)
-    total = visited.count() if budget is not None else 0
+    if budget is None:
+        front = visited = frontier.localCheckpoint(eager=False)
+        total = 0
+    else:
+        front, total = _checkpoint_count(frontier)
+        visited = front
     hop = 0
     while max_hops is None or hop < max_hops:
         hop += 1
@@ -82,9 +97,8 @@ def reach(edges: DataFrame, frontier: DataFrame,
                .alias("n")
                .join(visited.select(*seen_cols).alias("s"), seen_on,
                      "left_anti")
-               .distinct()
-               .localCheckpoint(eager=True))
-        n = nxt.count()
+               .distinct())
+        nxt, n = _checkpoint_count(nxt)
         if n == 0:
             break
         total += n
@@ -725,7 +739,7 @@ def adamic_adar(edges: DataFrame, src: str = "doc_a",
 
 
 def kcore(edges: DataFrame, k: int = 2, src: str = "doc_a",
-          dst: str = "doc_b", max_iter: int = 50) -> DataFrame:
+          dst: str = "doc_b") -> DataFrame:
     """k-core decomposition membership by iterative peeling (the
     standard distributed formulation): repeatedly delete vertices
     whose current degree is below ``k`` until a fixpoint; survivors
@@ -737,9 +751,11 @@ def kcore(edges: DataFrame, k: int = 2, src: str = "doc_a",
     Scale shape: each round is one degree groupBy plus two anti-joins
     keyed on the vertex — no vertex ever sees more than its own
     adjacency; rounds are bounded by the longest pendant chain, not
-    |V|; the edge frame is localCheckpointed every round (it is
-    referenced by both sides of the next round's anti-joins, and the
-    lineage would otherwise double per round).  The per-round
+    |V|, and every round that does not stop deletes at least one
+    vertex, so the loop needs no cap; the edge frame is
+    localCheckpointed every round (it is referenced by both sides of
+    the next round's anti-joins, and the lineage would otherwise
+    double per round).  The per-round
     convergence probe is a count on the (shrinking) sub-k vertex set.
 
     Returns (node, in_core, core_degree): one row per vertex of the
@@ -750,7 +766,7 @@ def kcore(edges: DataFrame, k: int = 2, src: str = "doc_a",
                  .unionByName(und.select(F.col("v").alias("n")))
                  .distinct().localCheckpoint())
     cur = und
-    for _ in range(max_iter):
+    while True:
         deg = _degrees(cur)
         bad = deg.where(F.col("d") < k).select("n").localCheckpoint()
         if bad.isEmpty():
@@ -760,9 +776,6 @@ def kcore(edges: DataFrame, k: int = 2, src: str = "doc_a",
                .join(bad.withColumnRenamed("n", "v"), "v", "anti")
                .select("u", "v")
                .localCheckpoint())
-    else:
-        raise RuntimeError("kcore: no fixpoint after %d rounds"
-                           % max_iter)
     core_deg = _degrees(cur).withColumnRenamed("d", "core_degree")
     return (all_nodes.join(core_deg, all_nodes.n == core_deg.n, "left")
             .select(all_nodes.n.alias("node"),
@@ -1656,8 +1669,8 @@ def wl_colors(edges: DataFrame, rounds: int = 3,
 
 
 def betweenness(edges: DataFrame, sources: list | None = None,
-                max_rounds: int = 32, src: str = "doc_a",
-                dst: str = "doc_b", round_to: int = 6) -> DataFrame:
+                src: str = "doc_a", dst: str = "doc_b",
+                round_to: int = 6) -> DataFrame:
     """Betweenness centrality by distributed Brandes (Brandes 2001):
     run BFS from every source SIMULTANEOUSLY (the frontier is keyed
     (source, node), so one Spark job round advances |S| searches at
@@ -1677,10 +1690,11 @@ def betweenness(edges: DataFrame, sources: list | None = None,
 
     Scale shape: every forward round is one join + one groupBy on the
     (source, node) frontier; every backward round joins three
-    dimension-of-the-frontier frames; rounds are bounded by the graph
-    diameter (``max_rounds`` guards adversarial chains, mirroring the
-    property-path budget).  All sigma counts are exact longs; deltas
-    are re-rounded to 9 per level so the replay is engine-stable.
+    dimension-of-the-frontier frames; the forward search ends in the
+    first round that reaches no unseen (source, node) pair, so rounds
+    are the largest source eccentricity + 1.  All sigma counts are
+    exact longs; deltas are re-rounded to 9 per level so the replay
+    is engine-stable.
 
     Returns (node, betweenness) for every node reached by a source."""
     und = _normalize_undirected(edges, src, dst)
@@ -1701,10 +1715,6 @@ def betweenness(edges: DataFrame, sources: list | None = None,
     d = 0
     while True:
         d += 1
-        if d > max_rounds:
-            raise RuntimeError(
-                "betweenness exceeded %d BFS rounds (graph diameter "
-                "over budget)" % max_rounds)
         nxt = (levels[d - 1]
                .join(sym, levels[d - 1]["v"] == sym["a"])
                .select("s", F.col("b").alias("v"), "sig")
@@ -1755,8 +1765,8 @@ def betweenness(edges: DataFrame, sources: list | None = None,
                     .alias("betweenness")))
 
 
-def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 32,
-           src: str = "doc_a", dst: str = "doc_b") -> DataFrame:
+def ktruss(edges: DataFrame, k: int = 3, src: str = "doc_a",
+           dst: str = "doc_b") -> DataFrame:
     """k-truss decomposition (Cohen 2008): iteratively delete every
     edge supported by fewer than k-2 triangles until none remain —
     the EDGE analogue of k-core, and a much stronger cohesion filter
@@ -1768,16 +1778,14 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 32,
     Scale shape: each round recomputes edge support with the same
     degree-oriented wedge join as :func:`triangle_counts` (fan-out
     bounded O(sqrt(|E|)) per node) and filters — one join + one
-    groupBy + one anti-ish filter per round, edge set shrinks
-    monotonically, ``max_rounds`` guards pathological cascades
-    (peeling cascades longer than ~log scale are rare in web graphs;
-    the guard mirrors the property-path budget).
+    groupBy + one anti-ish filter per round; every round that does
+    not stop deletes at least one edge, so the loop needs no cap.
 
     Returns the surviving edges (node_a, node_b, support) with
     node_a < node_b."""
     cur = _normalize_undirected(edges, src, dst)
     need = int(k) - 2
-    for _ in range(max_rounds):
+    while True:
         deg = _degrees(cur)
         e = (cur.join(deg.select(F.col("n").alias("u"),
                                  F.col("d").alias("du")), "u")
@@ -1820,15 +1828,9 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 32,
         n_cur = cur.count()
         n_nxt = nxt.count()
         cur = nxt.select("u", "v")
-        if n_nxt == n_cur:
+        if n_nxt == n_cur or n_nxt == 0:
             return nxt.select(F.col("u").alias("node_a"),
                               F.col("v").alias("node_b"), "support")
-        if n_nxt == 0:
-            return nxt.select(F.col("u").alias("node_a"),
-                              F.col("v").alias("node_b"), "support")
-    raise RuntimeError(
-        "ktruss exceeded %d peel rounds (cascade over budget)"
-        % max_rounds)
 
 
 def harmonic_centrality(edges: DataFrame, seeds: DataFrame,
@@ -2253,8 +2255,7 @@ def katz_centrality(edges: DataFrame, rounds: int = 3,
 
 
 def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
-                weight_col: str = "weight",
-                max_rounds: int = 8) -> DataFrame:
+                weight_col: str = "weight") -> DataFrame:
     """Borůvka minimum spanning forest — THE distributed MST
     algorithm (every component picks its cheapest outgoing edge;
     components at least halve per round, so log n rounds): the
@@ -2271,13 +2272,9 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
     reuse over the textbook star-contraction — declared: contraction
     touches only selected-edge stars and is the constant-factor
     optimization at 10^12 edges, the label algebra is identical).
-    Terminates early when no cross-component edge remains.  If
-    ``max_rounds`` is exhausted FIRST (components at least double in
-    size per round, so r rounds only guarantee components up to ~2^r
-    vertices are fully merged), the function checks for surviving
-    cross-component edges and raises rather than silently returning
-    an incomplete forest (the repo's no-silent-caps convention) —
-    callers with larger components pass a bigger ``max_rounds``.
+    Terminates in the first round with no cross-component edge;
+    every earlier round merges at least two components, so the loop
+    needs no cap.
 
     Returns the forest edges (src, dst, weight)."""
     from .canonicalize import connected_components
@@ -2292,8 +2289,7 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
               .withColumn("component", F.col("vertex"))
               .localCheckpoint(eager=True))
     forest = None
-    converged = False
-    for _ in range(max_rounds):
+    while True:
         both = (e.select("u", "v", "w")
                 .unionByName(e.select(F.col("v").alias("u"),
                                       F.col("u").alias("v"), "w")))
@@ -2312,7 +2308,6 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
                           F.greatest("u", "v").alias("v"), "w")
                   .distinct())
         if picked.isEmpty():
-            converged = True
             break
         forest = (picked if forest is None
                   else forest.unionByName(picked).distinct())
@@ -2333,23 +2328,6 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
         return e.select(F.col("u").alias("src"),
                         F.col("v").alias("dst"),
                         F.col("w").alias("weight")).limit(0)
-    if not converged:
-        # max_rounds exhausted with a merge still pending last round:
-        # verify nothing cross-component survives before returning —
-        # an incomplete forest returned silently would corrupt every
-        # downstream single-linkage cut (no-silent-caps convention)
-        lu = labels.select(F.col("vertex").alias("u"),
-                           F.col("component").alias("cu"))
-        lv = labels.select(F.col("vertex").alias("v"),
-                           F.col("component").alias("cv"))
-        leftover = (e.join(lu, "u").join(lv, "v")
-                    .where(F.col("cu") != F.col("cv")))
-        if not leftover.isEmpty():
-            raise RuntimeError(
-                "boruvka_msf: max_rounds=%d exhausted with cross-"
-                "component edges remaining — the forest is incomplete"
-                " (components only merge up to ~2^rounds vertices per"
-                " pass); rerun with a larger max_rounds" % max_rounds)
     return forest.select(F.col("u").alias("src"),
                          F.col("v").alias("dst"),
                          F.col("w").alias("weight"))

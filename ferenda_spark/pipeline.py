@@ -62,8 +62,9 @@ def flagship(spark: SparkSession, pages: DataFrame,
     canonical graph is rebuilt from the committed rows of the current
     ``pages`` (a changed, deleted or reverted page leaves no stale
     triples, so it equals the graph of a fresh run), written with
-    :func:`catalog.write_triples` to ``<store>/triples``, and read
-    back."""
+    :func:`catalog.write_triples` to the flat parquet directory
+    ``<store>/triples`` (one file per document context), and read back
+    with ``spark.read.parquet``."""
     if store is None:
         return canonical_triples(spark,
                                  parsed_docs(pages).localCheckpoint())
@@ -93,7 +94,5 @@ def flagship(spark: SparkSession, pages: DataFrame,
     triples, _, _ = run_stage_atomic(parsed, store, "triples", triples_t,
                                      source_col="input_fingerprint")
     t = live(triples, parsed, "input_fingerprint").select(*TRIPLE_COLS)
-    catalog.write_triples(rewrite_canonical(t, sameas_components(t)),
-                          store)
-    return (catalog.read_stage(spark, store, "triples")
-            .drop("context_bucket"))
+    return spark.read.parquet(catalog.write_triples(
+        rewrite_canonical(t, sameas_components(t)), store))

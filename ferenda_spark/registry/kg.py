@@ -58,17 +58,13 @@ from ferenda_spark.snaptable import SnapshotTable
 
 @functools.cache
 def _canonical_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sameAs canonicalization STAGE TABLE: the connected-
-    components fixpoint runs ONCE per corpus and is committed to a
-    snapshot table; every consumer (kg_sameas_canonical,
-    kg_canonical_triples, downstream rewrites) reads the stored
-    mapping back instead of re-running the fixpoint per query — the
-    production shape, where canonicalization is an ingest stage, not
-    a query-time computation."""
-    tbl = SnapshotTable(tempfile.mkdtemp(
-        prefix="ferenda_spark_sameas_stage_"))
-    tbl.create(sameas_components(_triples(spark, sf_dir)))
-    return tbl.read(spark)
+    """The sameAs canonical mapping of the corpus, computed once per
+    ``(spark, sf_dir)``: every consumer (kg_sameas_canonical,
+    kg_canonical_triples, downstream rewrites) joins this frame
+    instead of re-running the connected-components fixpoint per
+    query.  Its labels are already materialized with
+    ``localCheckpoint``."""
+    return sameas_components(_triples(spark, sf_dir))
 
 
 _RANKING_NEEDS = [("need0", "spark"), ("need0", "merge"),
@@ -231,8 +227,8 @@ def _q_faceted(spark, sf_dir):
              AS canonical_uri
     FROM verts""")
 def _q_sameas_canonical(spark, sf_dir):
-    """T11: the canonicalization stage — builds (and commits) the
-    sameAs mapping snapshot table that downstream queries join."""
+    """T11: the canonicalization stage — builds the sameAs mapping,
+    once per corpus, that downstream queries join."""
     return _canonical_mapping(spark, sf_dir)
 
 

@@ -7,7 +7,7 @@ production).
 
 Why this exists (north rule): "every stage checkpoints to Iceberg with
 per-partition lineage and counters so the DAG is resumable mid-run".
-catalog.write_stage gives plain overwrite tables; this module adds the
+catalog.write_triples gives a plain overwrite sink; this module adds the
 transactional half the production deployment gets from Iceberg:
 
 * **atomic commits** — data files land first under ``data/u-<uuid>``,

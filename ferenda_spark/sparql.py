@@ -1189,7 +1189,10 @@ def _path_edges(triples: DataFrame, p, ctx, ctx_var=None) -> DataFrame:
     """Edge relation for one path step.  Under GRAPH ?var the edges
     keep their named-graph id as a ``__pctx`` key column, so the
     closure/BFS fixpoints below stay within each graph (a path never
-    crosses graph boundaries, per SPARQL per-named-graph scoping)."""
+    crosses graph boundaries, per SPARQL per-named-graph scoping).
+    The checkpoint is lazy: the first action over the edges (the
+    fixpoint's first count) computes and keeps them, with no
+    checkpoint job of their own."""
     df = triples
     if ctx is not None and "context" in triples.columns:
         df = df.where(F.col("context") == ctx.value)
@@ -1216,9 +1219,10 @@ def _path_edges(triples: DataFrame, p, ctx, ctx_var=None) -> DataFrame:
         out = parts[0]
         for q in parts[1:]:
             out = out.unionByName(q)
-        return out.distinct().localCheckpoint()
+        return out.distinct().localCheckpoint(eager=False)
     return (df.where(F.col("pred") == p.value)
-            .select("subj", "obj", *extra).distinct().localCheckpoint())
+            .select("subj", "obj", *extra).distinct()
+            .localCheckpoint(eager=False))
 
 
 def _path_reach(edges: DataFrame, start: str, forward: bool) -> DataFrame:

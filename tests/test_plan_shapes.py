@@ -6,6 +6,8 @@ REAL query over the sf0.001 parquet."""
 
 import contextlib
 import io
+import os
+import tempfile
 
 import pytest
 
@@ -84,13 +86,33 @@ def test_canonical_triples_reads_stage_not_fixpoint(spark, queries):
     assert "Scan ExistingRDD" not in plan.split("AdaptiveSparkPlan")[0]
 
 
-def test_sameas_canonical_is_stage_table_read(spark, queries):
-    # the returned frame must be a read of the committed sameAs
-    # mapping stage table (parquet snapshot scan) — the CC fixpoint
-    # runs once at stage-build, never inside the consumer plan
+def test_sameas_canonical_is_materialized_read(spark, queries):
+    # the returned frame must be a read of the sameAs mapping that was
+    # materialized once per corpus (a checkpointed RDD scan) — the CC
+    # fixpoint's joins, aggregates and shuffles never run inside the
+    # consumer plan
     plan = _plan(queries["kg_sameas_canonical"](spark, SF))
-    assert "Scan parquet" in plan
-    assert "Scan ExistingRDD" not in plan.split("AdaptiveSparkPlan")[0]
+    tree = plan.split("(1) ")[0]
+    assert "Scan ExistingRDD" in tree
+    for op in ("Join", "Aggregate", "Exchange"):
+        assert op not in tree
+
+
+def test_canonical_mapping_leaves_no_temp_dir(spark):
+    """The registry's sameAs mapping is computed in memory: building
+    it creates no ``ferenda_spark_sameas_stage_*`` directory in the
+    system temp directory."""
+    from ferenda_spark.registry.kg import _canonical_mapping
+
+    def stage_dirs():
+        return {e for e in os.listdir(tempfile.gettempdir())
+                if e.startswith("ferenda_spark_sameas_stage_")}
+
+    before = stage_dirs()
+    # __wrapped__ bypasses functools.cache, so the body runs here even
+    # when an earlier test already built this corpus's mapping
+    assert _canonical_mapping.__wrapped__(spark, SF).count() > 0
+    assert stage_dirs() <= before
 
 
 def test_semantic_dedup_assignment_is_projection(spark, queries):

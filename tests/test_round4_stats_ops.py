@@ -556,12 +556,14 @@ def test_betweenness_sampled_sources_subset_sum(spark):
     assert got[0] == 0.0 and got[3] == 0.0
 
 
-def test_betweenness_round_budget_guard(spark):
+def test_betweenness_path_closed_form(spark):
     from ferenda_spark.operators.graphs import betweenness
+    # path 0-1-...-8: node i lies on the shortest path of each of the
+    # i * (8 - i) pairs with one end on either side of it
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "doc_a long, doc_b long")
-    with pytest.raises(RuntimeError, match="BFS rounds"):
-        betweenness(edges, max_rounds=3).collect()
+    got = {r.node: r.betweenness for r in betweenness(edges).collect()}
+    assert got == {i: float(i * (8 - i)) for i in range(9)}
 
 
 # --------------------------------------------------------------- MaxSim

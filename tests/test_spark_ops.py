@@ -531,8 +531,10 @@ def test_legal_mentions_distributed(spark):
 
 
 def test_catalog_triples_roundtrip(spark, tmpdir):
-    """S6 partitioned triple sink roundtrips and writes one file per
-    bucket whatever the upstream partitioning."""
+    """S6 triple sink: one flat parquet directory, each context's
+    graph in exactly one file whatever the upstream partitioning, the
+    file count bounded by the shuffle partitions, and an exact
+    roundtrip."""
     import os
     from ferenda_spark import catalog
     t = spark.createDataFrame(
@@ -541,15 +543,23 @@ def test_catalog_triples_roundtrip(spark, tmpdir):
         "subj string, pred string, obj string, obj_datatype string, "
         "obj_lang string, context string")
     path = catalog.write_triples(t.repartition(16), tmpdir)
-    back = catalog.read_stage(spark, tmpdir, "triples")
-    assert back.count() == 400
-    assert "context_bucket" in back.columns
-    buckets = [d for d in os.listdir(path)
-               if d.startswith("context_bucket=")]
-    files = {d: [f for f in os.listdir(os.path.join(path, d))
-                 if f.endswith(".parquet")] for d in buckets}
-    assert all(len(fs) == 1 for fs in files.values()), files
-    assert sum(len(fs) for fs in files.values()) <= catalog.N_BUCKETS
+    assert path == os.path.join(tmpdir, "triples")
+    entries = os.listdir(path)
+    assert not [e for e in entries
+                if os.path.isdir(os.path.join(path, e))], entries
+    files = [e for e in entries if e.endswith(".parquet")]
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert 1 <= len(files) <= n_shuffle, files
+    back = spark.read.parquet(path)
+    assert back.columns == t.columns
+    per_ctx = (back.withColumn("f", F.input_file_name())
+               .groupBy("context")
+               .agg(F.countDistinct("f").alias("n_files"))
+               .collect())
+    assert len(per_ctx) == 40
+    assert all(r.n_files == 1 for r in per_ctx), per_ctx
+    assert back.exceptAll(t).count() == 0
+    assert t.exceptAll(back).count() == 0
 
 
 def test_connected_components_arbitrary_uris(spark):
